@@ -105,12 +105,160 @@ def test_mor_no_match_is_a_noop_commit(spark, tdir):
 def test_mode_validation(spark, tdir):
     t = make_table(spark, tdir)
     seed(spark, t)
-    with pytest.raises(ValueError, match="mode"):
-        t.delete_where("k = 1", mode="bogus")
-    with pytest.raises(ValueError, match="mode"):
-        t.delete_keys(
-            spark.createDataFrame([(1,)], "k long"), mode="bogus"
+    src = spark.createDataFrame([(1, 5, 2)], "k long, v long, ver long")
+    for verb, call in [
+        ("delete_where", lambda m: t.delete_where("k = 1", mode=m)),
+        ("delete_keys", lambda m: t.delete_keys(
+            spark.createDataFrame([(1,)], "k long"), mode=m
+        )),
+        ("update_where", lambda m: t.update_where(
+            "k = 1", {"v": "v + 1"}, mode=m
+        )),
+        ("merge_into", lambda m: t.merge_into(src, mode=m)),
+    ]:
+        with pytest.raises(
+            ValueError,
+            match=f"^{verb}: mode must be 'cow' or 'mor', got 'bogus'$",
+        ):
+            call("bogus")
+    assert t.current_id() == 1
+
+
+# ------------------------------------------------- verb x mode contract
+
+# Every row-level verb under both modes on one 12-row table: the
+# committed operation, the FULL properties dict, and the physical
+# shape of the commit (data files replaced vs a dv-*.parquet sidecar
+# added). Key 3 hashes to bucket 3 and key 100 to bucket 2 under the
+# 4-bucket layout.
+_USER = {"by": "characterization"}
+_DML_CASES = {
+    ("delete_where", "cow"): (
+        "delete",
+        {"delete.predicate": "k = 3", "read.predicate": "k = 3"},
+        (True, True, 0),
+    ),
+    ("delete_where", "mor"): (
+        "delete",
+        {
+            "delete.predicate": "k = 3", "delete.mode": "mor",
+            "read.predicate": "k = 3",
+        },
+        (False, False, 1),
+    ),
+    ("update_where", "cow"): (
+        "update",
+        {
+            "update.predicate": "k = 3", "update.columns": ["v"],
+            "read.predicate": "k = 3",
+        },
+        (True, True, 0),
+    ),
+    ("update_where", "mor"): (
+        "update",
+        {
+            "update.predicate": "k = 3", "update.columns": ["v"],
+            "update.mode": "mor", "read.predicate": "k = 3",
+        },
+        (False, True, 1),
+    ),
+    ("delete_keys", "cow"): (
+        "delete",
+        {"delete.keys.buckets": 1, "read.buckets": [3]},
+        (True, True, 0),
+    ),
+    ("delete_keys", "mor"): (
+        "delete",
+        {"delete.mode": "mor", "read.buckets": [3]},
+        (False, False, 1),
+    ),
+    ("merge_into", "cow"): (
+        "merge_into",
+        {
+            "merge_into.when_matched": "update",
+            "merge_into.when_not_matched": "insert",
+            "merge_into.matched_condition": "s_v > t_v",
+            "read.buckets": [2, 3],
+        },
+        (True, True, 0),
+    ),
+    ("merge_into", "mor"): (
+        "merge_into",
+        {
+            "merge_into.when_matched": "update",
+            "merge_into.when_not_matched": "insert",
+            "merge_into.matched_condition": "s_v > t_v",
+            "merge_into.mode": "mor",
+            "read.buckets": [2, 3],
+        },
+        (False, True, 1),
+    ),
+}
+
+
+def _dml(spark, t, verb, mode, hit):
+    """One call of ``verb``: ``hit`` picks the matching input, else an
+    input whose candidates are read but hold no actual match."""
+    if verb == "delete_where":
+        return t.delete_where(
+            "k = 3" if hit else "v = 15", properties=_USER, mode=mode
         )
+    if verb == "update_where":
+        return t.update_where(
+            "k = 3" if hit else "v = 15", {"v": "v + 1"},
+            properties=_USER, mode=mode,
+        )
+    if verb == "delete_keys":
+        keys = spark.createDataFrame([(3 if hit else 1000,)], "k long")
+        return t.delete_keys(keys, properties=_USER, mode=mode)
+    src = spark.createDataFrame(
+        [(3, 999, 2), (100, 1000, 2)] if hit else [(3, 0, 2)],
+        "k long, v long, ver long",
+    )
+    return t.merge_into(
+        src, matched_condition="s_v > t_v",
+        when_not_matched="insert" if hit else "ignore",
+        properties=_USER, mode=mode,
+    )
+
+
+_DML_AFTER = {
+    "delete_where": {k: k * 10 for k in range(12) if k != 3},
+    "update_where": {**{k: k * 10 for k in range(12)}, 3: 31},
+    "delete_keys": {k: k * 10 for k in range(12) if k != 3},
+    "merge_into": {**{k: k * 10 for k in range(12)}, 3: 999, 100: 1000},
+}
+
+
+@pytest.mark.parametrize("verb,mode", sorted(_DML_CASES))
+def test_row_level_verb_mode_contract(spark, tdir, verb, mode):
+    operation, props, (replaced, added, n_dv) = _DML_CASES[verb, mode]
+    t = make_table(spark, tdir)
+    seed(spark, t, n=12)
+    mdir = os.path.join(tdir, "manifests")
+    ddir = os.path.join(tdir, "data")
+
+    def dvs():
+        return {n for n in os.listdir(ddir) if n.startswith("dv-")}
+
+    base = t.current_id()
+    n_manifests = len(os.listdir(mdir))
+    assert _dml(spark, t, verb, mode, hit=False) == base
+    assert t.current_id() == base
+    assert len(os.listdir(mdir)) == n_manifests
+    assert not dvs()
+
+    before = set(data_paths(t))
+    sid = _dml(spark, t, verb, mode, hit=True)
+    assert sid == base + 1 == t.current_id()
+    raw = t._raw_meta(sid)
+    assert raw["operation"] == operation
+    assert raw["properties"] == {**_USER, **props}
+    after = set(data_paths(t))
+    assert (bool(before - after), bool(after - before), len(dvs())) == (
+        replaced, added, n_dv,
+    )
+    assert dict(rows(t.read())) == _DML_AFTER[verb]
 
 
 # ----------------------------------------------------------- COW parity

@@ -818,3 +818,91 @@ def test_publish_branches_validation(spark, gdir):
     out = g.publish_branches({"a": ba})
     assert out == {"a": a.current_id()}
     assert a.branches() == []
+
+
+# ---------------------------------------------------------------------
+# Failure injection for the threaded member prepares and the
+# before_claim hook: whatever raises before the txn claim, no member
+# advances, no temp manifest or temp txn record survives, and the same
+# call retried afterwards commits.
+
+
+def _assert_nothing_claimed(g, ids):
+    for name, t in g.tables.items():
+        assert t.current_id() == ids[name], name
+    for d in [t._manifest_dir for t in g.tables.values()] + [g._txn_dir]:
+        tmps = [n for n in os.listdir(d) if n.startswith(".tmp-")]
+        assert tmps == [], (d, tmps)
+
+
+def test_group_prepare_raises_while_sibling_mid_write(
+    spark, gdir, monkeypatch
+):
+    """Member b's prepare raises inside _txn_all's thread pool while
+    member a is between its staged Spark write and its promotion."""
+    import threading
+
+    a, b, g = mk(spark, gdir)
+    g.append_all(
+        {"a": batch(spark, [(1, 1)]), "b": batch(spark, [(9, 1)])}
+    )
+    ids = {"a": a.current_id(), "b": b.current_id()}
+    a_mid_write = threading.Event()
+    b_raised = threading.Event()
+    real_promote = a._promote_staged
+
+    def slow_promote(staging, run):
+        a_mid_write.set()
+        assert b_raised.wait(60)
+        return real_promote(staging, run)
+
+    def failing_prepare(df, properties=None):
+        assert a_mid_write.wait(60)
+        b_raised.set()
+        raise RuntimeError("injected member prepare failure")
+
+    monkeypatch.setattr(a, "_promote_staged", slow_promote)
+    monkeypatch.setattr(b, "_prepare_append", failing_prepare)
+    batches = {"a": batch(spark, [(2, 2)]), "b": batch(spark, [(8, 2)])}
+    with pytest.raises(RuntimeError, match="injected member prepare"):
+        g.append_all(batches)
+    assert a_mid_write.is_set() and b_raised.is_set()
+    _assert_nothing_claimed(g, ids)
+    monkeypatch.undo()
+
+    assert g.append_all(batches) == {"a": 2, "b": 2}
+    assert {r["k"] for r in a.read().collect()} == {1, 2}
+    assert {r["k"] for r in b.read().collect()} == {8, 9}
+
+
+def test_group_before_claim_failure_leaves_nothing(spark, gdir):
+    """append_all(before_claim=) raising after every member's temp
+    manifest is durable: the temps are reclaimed, nothing is claimed,
+    and a retry with a passing hook commits."""
+    a, b, g = mk(spark, gdir)
+    g.append_all(
+        {"a": batch(spark, [(1, 1)]), "b": batch(spark, [(9, 1)])}
+    )
+    ids = {"a": a.current_id(), "b": b.current_id()}
+    seen = []
+
+    def failing_hook():
+        seen.append(sorted(
+            n
+            for t in (a, b)
+            for n in os.listdir(t._manifest_dir)
+            if n.startswith(".tmp-")
+        ))
+        raise OSError("injected before_claim failure")
+
+    batches = {"a": batch(spark, [(2, 2)]), "b": batch(spark, [(8, 2)])}
+    with pytest.raises(OSError, match="injected before_claim"):
+        g.append_all(batches, before_claim=failing_hook)
+    assert len(seen) == 1 and len(seen[0]) == 2  # both temps existed
+    _assert_nothing_claimed(g, ids)
+
+    calls = []
+    out = g.append_all(batches, before_claim=lambda: calls.append(1))
+    assert out == {"a": 2, "b": 2} and calls == [1]
+    assert {r["k"] for r in a.read().collect()} == {1, 2}
+    assert {r["k"] for r in b.read().collect()} == {8, 9}

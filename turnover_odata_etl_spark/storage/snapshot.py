@@ -43,6 +43,27 @@ pointer), sized down to stdlib + parquet:
   manifest's per-file ``bucket``/``rows`` stats are the file-level
   pruning metadata (read a key's bucket → open only its files).
 
+Row-level DML is ONE pipeline for both physical modes.
+``delete_where``, ``update_where``, ``delete_keys`` and ``merge_into``
+each supply only what is their own (``_RowLevel``: validation,
+candidate choice, the hit column, what a hit row becomes, inserts,
+commit properties), and every attempt runs ``_row_level_once``: base
+snapshot → candidate files (predicate verbs: footer-stats and bloom
+prune, so files proven disjoint are never read; keyed verbs: only the
+buckets the cast, de-duplicated keys/source frame hashes to) →
+candidate rows with a ``__hit`` column → touched buckets (buckets
+holding a hit, plus insert buckets; none touched returns the current
+id with no empty commit) → one tail per mode. Copy-on-write
+(``mode="cow"``) rewrites only the touched buckets — hit rows dropped
+or replaced, stats-pruned files carried by reference — and commits
+the O(touched) delta. Merge-on-read (``mode="mor"``) writes the hit
+positions as ONE deletion-vector sidecar (the Iceberg v2 positional-
+delete pattern) plus replacements and inserts as new files, data
+files untouched (``_commit_dv``). Both tails record the read set
+(``read.predicate`` or ``read.buckets``) on the commit, so a lost CAS
+rebases when the winner provably missed that read set and re-plans
+otherwise.
+
 Scale notes. The manifest is file-COUNT-sized metadata (one JSON row
 per data file), the analogue of an Iceberg manifest list; the merge
 itself is the same pruned shape as before (read touched buckets only,
@@ -59,6 +80,9 @@ import math
 import os
 import re
 import uuid
+from dataclasses import dataclass
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -298,6 +322,52 @@ def predicate_bounds(predicate: str) -> dict[str, tuple]:
 
 class CommitConflict(RuntimeError):
     """Another writer claimed the target snapshot id (CAS lost)."""
+
+
+def _retry_cas(label: str, max_retries: int, attempt) -> int:
+    """Run one commit ``attempt`` until it lands: a lost CAS re-plans
+    the whole attempt on the new current (optimistic concurrency,
+    Iceberg's retry loop). ``label`` opens the give-up message."""
+    last: Exception | None = None
+    for _ in range(max_retries):
+        try:
+            return attempt()
+        except CommitConflict as e:  # re-plan on the new current
+            last = e
+    raise RuntimeError(
+        f"{label} lost the commit race {max_retries} times"
+    ) from last
+
+
+def _check_mode(verb: str, mode: str) -> None:
+    if mode not in ("cow", "mor"):
+        raise ValueError(
+            f"{verb}: mode must be 'cow' or 'mor', got {mode!r}"
+        )
+
+
+@dataclass(frozen=True)
+class _RowLevel:
+    """What one row-level verb supplies to the shared pipeline
+    (:meth:`SnapshotTable._row_level_once`); the candidate read, the
+    touched-bucket probe and both commit tails are the pipeline's."""
+
+    operation: str  # the manifest ``operation``
+    props: dict  # the verb's own commit properties (a caller's win)
+    mode_prop: str  # records ``mode="mor"`` on the commit
+    # Candidates: a ``predicate`` (stats/bloom file prune; the hit is
+    # the predicate) or a keyed ``frame(schema, pin)`` — the aligned,
+    # pinned keys/source frame whose key buckets are the candidates —
+    # with ``match(rows, frame)`` adding ``__hit`` to candidate rows.
+    predicate: str | None = None
+    frame: Callable | None = None
+    match: Callable | None = None
+    validate: Callable | None = None  # (schema) -> None; raises
+    # What a hit row becomes: ``None`` drops it; else ``become(schema)``
+    # gives {column: value} over the PRE-update row.
+    become: Callable | None = None
+    inserts: Callable | None = None  # (frame, rows) -> new rows
+    touched_prop: str | None = None  # CoW only: rewritten buckets
 
 
 # Every Nth commit writes a FULL manifest (all buckets) instead of a
@@ -1582,17 +1652,10 @@ class SnapshotTable:
         commits whose every row is a tombstone. Retries the whole
         merge on a lost CAS, re-reading the winner's state (optimistic
         concurrency)."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._merge_once(
-                    batch_df, tombstone_filter, properties
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"merge lost the commit race {max_retries} times"
-        ) from last
+        return _retry_cas(
+            "merge", max_retries,
+            lambda: self._merge_once(batch_df, tombstone_filter, properties),
+        )
 
     def append(
         self,
@@ -1642,15 +1705,10 @@ class SnapshotTable:
             raise ValueError(
                 f"append: batch is missing key/order columns {missing}"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._append_once(batch_df, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"append lost the commit race {max_retries} times"
-        ) from last
+        return _retry_cas(
+            "append", max_retries,
+            lambda: self._append_once(batch_df, properties),
+        )
 
     def _append_once(
         self, batch_df: DataFrame, properties: dict | None
@@ -1780,15 +1838,10 @@ class SnapshotTable:
                     f"compact: unknown buckets {unknown} "
                     f"(layout has {self.n_buckets})"
                 )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._compact_once(min_files, dedup_keys, buckets)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"compact lost the commit race {max_retries} times"
-        ) from last
+        return _retry_cas(
+            "compact", max_retries,
+            lambda: self._compact_once(min_files, dedup_keys, buckets),
+        )
 
     def _compact_once(
         self,
@@ -1913,17 +1966,10 @@ class SnapshotTable:
         job). Quantile cuts come from the scoped rows — clustering
         quality only; pruning correctness always rests on exact
         footer stats."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._zorder_once(
-                    cols, rows_per_file, bits, buckets
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"rewrite_zorder lost the commit race {max_retries} times"
-        ) from last
+        return _retry_cas(
+            "rewrite_zorder", max_retries,
+            lambda: self._zorder_once(cols, rows_per_file, bits, buckets),
+        )
 
     def _zorder_once(
         self,
@@ -2054,15 +2100,10 @@ class SnapshotTable:
         travel keeps pre-overwrite snapshots readable until
         ``expire_snapshots``; the same commit CAS applies. O(table)
         by design — this IS the full rewrite."""
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._overwrite_once(df, operation, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"overwrite lost the commit race {max_retries} times"
-        ) from last
+        return _retry_cas(
+            "overwrite", max_retries,
+            lambda: self._overwrite_once(df, operation, properties),
+        )
 
     def _overwrite_once(
         self, df: DataFrame, operation: str, properties: dict | None
@@ -2173,52 +2214,36 @@ class SnapshotTable:
           the weekly GDPR batch at 100 TB deletes kilobytes instead
           of rewriting terabytes.
 
-        Cost discipline, in pruning order:
+        Cost discipline is the row-level pipeline's (module
+        docstring): files whose footer stats or blooms can't match
+        the predicate are never read, only buckets holding an actual
+        match are rewritten, and a no-match delete returns the
+        current id with no empty commit. CAS retry on a lost race,
+        time travel preserved (deleted rows remain readable at
+        pre-delete snapshots until ``expire_snapshots``), and the
+        predicate is recorded on the manifest as the
+        ``delete.predicate`` property for audit."""
+        _check_mode("delete_where", mode)
+        spec = _RowLevel(
+            operation="delete",
+            props={"delete.predicate": predicate},
+            mode_prop="delete.mode",
+            predicate=predicate,
+        )
+        return _retry_cas(
+            "delete_where", max_retries,
+            lambda: self._row_level_once(spec, mode == "mor", properties),
+        )
 
-        1. **File-level stats prune** — :func:`predicate_bounds`
-           extracts per-column ``[lo, hi]`` bounds implied by the
-           predicate; files whose footer stats can't overlap are not
-           even READ (same machinery as :meth:`read_where`; with
-           range-sorted or Z-ordered layout the prune skips most of
-           the table).
-        2. **File-level copy-on-write** — only files that (a) might
-           match by stats AND (b) live in a bucket where at least one
-           row ACTUALLY matched are rewritten; every other file —
-           including non-candidate files inside rewritten buckets —
-           carries by reference.
-        3. **O(touched) commit** — the delta-manifest path; a no-match
-           delete returns the current id with no empty commit.
-
-        Runs under the same optimistic-concurrency contract as every
-        commit: CAS retry on a lost race, time travel preserved
-        (deleted rows remain readable at pre-delete snapshots until
-        ``expire_snapshots``), and the predicate is recorded on the
-        manifest as the ``delete.predicate`` property for audit."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"delete_where: mode must be 'cow' or 'mor', got {mode!r}"
-            )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._delete_mor_once(predicate, properties)
-                return self._delete_once(predicate, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"delete_where lost the commit race {max_retries} times"
-        ) from last
-
-    def _delete_mor_once(
-        self, predicate: str, properties: dict | None
+    def _row_level_once(
+        self, spec: _RowLevel, mor: bool, properties: dict | None
     ) -> int:
-        """Merge-on-read predicate DELETE: one O(matched rows)
-        sidecar write + one O(touched buckets) manifest delta — data
-        files untouched. The candidate scan rides the same stats +
-        bloom prune as the COW path, and reads DV-APPLIED, so a row
-        already deleted by an earlier vector can never be matched
-        twice (positions per file stay distinct by construction)."""
+        """One attempt of a row-level verb — the pipeline the module
+        docstring describes: candidate files → candidate rows with a
+        ``__hit`` column → touched buckets → the copy-on-write tail
+        (:meth:`_stage_rewrite` + :meth:`_commit_delta`) or the
+        merge-on-read tail (:meth:`_commit_dv`). Every frame it
+        persists is released on the way out."""
         from pyspark import StorageLevel
 
         base_id = self.current_id()
@@ -2228,35 +2253,143 @@ class SnapshotTable:
             )
         base_raw = self._raw_meta(base_id)
         self._adopt_layout(base_raw)
+        schema = self._schema_of(base_raw)
+        if spec.validate is not None:
+            spec.validate(schema)
         base_bb = self._by_bucket(base_id)
-        cand, _kept = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id  # stats/bloom prove nothing matches
-        matched = (
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                self._schema_of(base_raw),
-                keep_meta=True,
-            )
-            # NULL predicate rows SURVIVE — SQL DELETE semantics
-            .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .select("__fname", "__pos")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        pinned: list[DataFrame] = []
+
+        def pin(df: DataFrame) -> DataFrame:
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            pinned.append(df)
+            return df
+
         try:
-            props = dict(properties or {})
-            props.setdefault("delete.predicate", predicate)
-            props.setdefault("delete.mode", "mor")
-            # the predicate IS the read set — see _rebase_commit
-            props["read.predicate"] = predicate
-            return self._commit_dv(
-                base_id, base_raw, base_bb, cand, matched, props,
-                rebase_ok=True,
+            frame = None
+            if spec.predicate is not None:
+                cand, kept = self._split_candidates(
+                    base_bb, predicate_bounds(spec.predicate)
+                )
+                # the predicate IS the read set — the rebase validates
+                # the winner's new files against its bounds (round 16)
+                read_set = ("read.predicate", spec.predicate)
+            else:
+                frame = spec.frame(schema, pin)
+                target = self._buckets_of(self._with_bucket(frame))
+                cand = {
+                    b: self._entries(base_bb[b])
+                    for b in target
+                    if self._loc_n(base_bb.get(b, []))
+                }
+                kept = {}
+                # the PROBED bucket set (matched or not) — the rebase
+                # overlap check validates reads too (write-skew guard)
+                read_set = ("read.buckets", [int(b) for b in target])
+            if not cand and spec.inserts is None:
+                return base_id  # stats/bloom/layout prove no match
+            rows = self._with_bucket(
+                self._read_entries(
+                    [f for fs in cand.values() for f in fs],
+                    schema,
+                    # a keyed frame's own session — inside foreachBatch
+                    # the micro-batch belongs to a cloned session and a
+                    # join must not cross sessions (the _prepare_merge
+                    # rule)
+                    spark=getattr(frame, "sparkSession", self.spark),
+                    keep_meta=mor,
+                )
             )
+            if frame is None:
+                # NULL predicate rows never hit — SQL DML semantics
+                rows = rows.withColumn(
+                    "__hit",
+                    F.coalesce(F.expr(spec.predicate), F.lit(False)),
+                )
+            else:
+                rows = spec.match(rows, frame)
+            # CoW rewrites every candidate row; MoR needs only the hits
+            # — unless inserts must anti-join every candidate key
+            rows = pin(
+                rows if not mor or spec.inserts else rows.filter("__hit")
+            )
+            ins = None
+            if spec.inserts is not None:
+                ins = pin(self._with_bucket(spec.inserts(frame, rows)))
+            hit_b = set(self._buckets_of(rows.filter("__hit")))
+            ins_b = set(self._buckets_of(ins)) if ins is not None else set()
+            touched = sorted(hit_b | ins_b)
+            if not touched:
+                return base_id  # candidates held no actual match
+            props = dict(properties or {})
+            for k, v in spec.props.items():
+                props.setdefault(k, v)
+            if mor:
+                props.setdefault(spec.mode_prop, "mor")
+            elif spec.touched_prop:
+                props.setdefault(spec.touched_prop, len(touched))
+            props[read_set[0]] = read_set[1]
+            become = spec.become(schema) if spec.become else None
+            if mor:
+                # hits become position deletes; their replacements and
+                # the inserts are new files of the SAME commit
+                hits = rows.filter("__hit")
+                out = hits.withColumns(become) if become else None
+                staged = sorted((hit_b if become else set()) | ins_b)
+            else:
+                out = rows.filter(F.col("__bucket").isin(touched))
+                if become is None:
+                    out = out.filter(~F.col("__hit"))
+                else:
+                    out = out.withColumns(
+                        {
+                            c: F.when(F.col("__hit"), v).otherwise(
+                                F.col(c)
+                            )
+                            for c, v in become.items()
+                        }
+                    )
+                staged = touched
+            cols = ["__bucket", *schema.names]
+            parts = [p.select(*cols) for p in (out, ins) if p is not None]
+            new_files = (
+                self._stage_rewrite(
+                    reduce(DataFrame.unionByName, parts), staged
+                )
+                if staged
+                else []
+            )
+            if mor:
+                return self._commit_dv(
+                    base_id, base_raw, base_bb, cand,
+                    hits.select("__fname", "__pos"), props,
+                    new_files, spec.operation,
+                )
         finally:
-            matched.unpersist()
+            for df in reversed(pinned):
+                df.unpersist()
+        # Touched buckets: stats-pruned files carry by reference, the
+        # candidate files are replaced by the rewrite. Every other
+        # bucket carries through base_bb.
+        touched_new: dict[int, list[dict]] = {
+            bkt: list(kept.get(bkt, [])) for bkt in touched
+        }
+        for f in new_files:
+            touched_new[f["bucket"]].append(f)
+        return self._commit_delta(
+            base_raw["schema"], base_bb, touched_new,
+            operation=spec.operation, base_id=base_id, properties=props,
+            rebase_ok=True,
+        )
+
+    @staticmethod
+    def _buckets_of(df: DataFrame) -> list[int]:
+        """Sorted distinct ``__bucket`` ids of ``df`` — at most
+        ``n_buckets`` integers reach the driver: metadata, never
+        data."""
+        return sorted(
+            r["__bucket"]
+            for r in df.select("__bucket").distinct().collect()
+        )
 
     def _commit_dv(
         self,
@@ -2266,14 +2399,13 @@ class SnapshotTable:
         cand: dict,
         matched: DataFrame,
         props: dict,
-        extra_files: list | None = None,
-        operation: str = "delete",
-        rebase_ok: bool = False,
+        extra_files: list,
+        operation: str,
     ) -> int:
-        """Shared deletion-vector commit tail (round 14): given the
-        matched ``(__fname, __pos)`` frame, write ONE position
-        sidecar, flip the matched entries' ``dv`` references, and
-        commit the O(touched buckets) manifest delta. Write-side
+        """The merge-on-read tail of the row-level pipeline (round
+        14): given the matched ``(__fname, __pos)`` frame, write ONE
+        position sidecar, flip the matched entries' ``dv`` references,
+        and commit the O(touched buckets) manifest delta. Write-side
         fold: a file whose sidecar chain would exceed ``DV_CHAIN_MAX``
         gets its accumulated positions folded into the new sidecar
         and references only it — chains stay O(1) per file without
@@ -2286,10 +2418,10 @@ class SnapshotTable:
         manifest claim, so a crash in between leaves only an
         unreferenced orphan.
 
-        ``extra_files`` (the MOR-update path) are fresh staged
-        entries appended into their buckets IN THE SAME commit as the
-        dv flips — atomicity is the manifest claim, exactly as for
-        every other verb."""
+        ``extra_files`` (updated rows and MERGE inserts) are fresh
+        staged entries appended into their buckets IN THE SAME commit
+        as the dv flips — atomicity is the manifest claim, exactly as
+        for every other verb."""
         import shutil
 
         counts = {
@@ -2298,8 +2430,6 @@ class SnapshotTable:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()  # ≤ touched files rows — metadata, never data
         }
-        if not counts and not extra_files:
-            return base_id  # candidates held no actual match
         by_fname = {
             os.path.basename(f["path"]): f
             for fs in cand.values()
@@ -2355,7 +2485,7 @@ class SnapshotTable:
             rel = f"data/{name}"
             fold_names = {os.path.basename(f["path"]) for f in fold}
         touched_buckets = {by_fname[fn]["bucket"] for fn in counts}
-        touched_buckets.update(f["bucket"] for f in extra_files or ())
+        touched_buckets.update(f["bucket"] for f in extra_files)
         touched_new: dict[int, list[dict]] = {}
         for bkt in sorted(touched_buckets):
             lst = []
@@ -2380,71 +2510,11 @@ class SnapshotTable:
                 }
                 lst.append(g)
             touched_new[bkt] = lst
-        for f in extra_files or ():
+        for f in extra_files:
             touched_new[f["bucket"]].append(f)
         return self._commit_delta(
             base_raw["schema"], base_bb, touched_new,
             operation=operation, base_id=base_id, properties=props,
-            rebase_ok=rebase_ok,
-        )
-
-    def _delete_once(self, predicate: str, properties: dict | None) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        cand, kept_files = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id  # stats prove nothing matches — no-op
-        cur = self._with_bucket(
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                self._schema_of(base_raw), spark=self.spark,
-            )
-        ).withColumn(
-            # NULL predicate rows SURVIVE — SQL DELETE semantics
-            "__hit", F.coalesce(F.expr(predicate), F.lit(False))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            touched = sorted(
-                r["__bucket"]
-                for r in cur.filter("__hit")
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id  # candidates held no actual match
-            survivors = cur.filter(
-                F.col("__bucket").isin(touched) & ~F.col("__hit")
-            ).drop("__hit")
-            new_files = self._stage_rewrite(survivors, touched)
-        finally:
-            cur.unpersist()
-        # Touched buckets: stats-pruned files carry by reference, the
-        # candidate files are replaced by the survivor rewrite.
-        # Unmatched candidate buckets keep their original lists.
-        touched_new: dict[int, list[dict]] = {
-            bkt: list(kept_files.get(bkt, [])) for bkt in touched
-        }
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("delete.predicate", predicate)
-        # the predicate IS the read set — the rebase validates the
-        # winner's new files against its bounds (round 16)
-        props["read.predicate"] = predicate
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="delete", base_id=base_id, properties=props,
             rebase_ok=True,
         )
 
@@ -2502,10 +2572,10 @@ class SnapshotTable:
         return cand, kept
 
     def _stage_rewrite(self, rows: DataFrame, touched: list) -> list:
-        """Staged COW write of the touched buckets' replacement rows
-        — the shared tail of delete_where/update_where/delete_keys
-        (one file per bucket, order-sorted for monotone row-group
-        stats, promoted to immutable names)."""
+        """Staged write of the row-level pipeline's new rows — the
+        touched buckets' replacements, updated rows and inserts (one
+        file per bucket, order-sorted for monotone row-group stats,
+        promoted to immutable names)."""
         run = uuid.uuid4().hex[:12]
         staging = os.path.join(self._data_dir, f".staging-{run}")
         (
@@ -2533,11 +2603,10 @@ class SnapshotTable:
         schema never drifts through an update); FALSE/NULL rows pass
         through byte-identical.
 
-        Same cost discipline as :meth:`delete_where`: predicate-bound
-        stats prune at FILE level, rewrite only buckets holding an
-        actual match, carry everything else by reference, O(touched)
-        delta commit, no-match no-op, CAS retry, predicate recorded as
-        a manifest property.
+        Same row-level pipeline as :meth:`delete_where` (module
+        docstring): file-level stats prune, only buckets holding an
+        actual match rewrite, no-match no-op, CAS retry, predicate
+        recorded as a manifest property.
 
         ``mode="mor"`` (round 14 — the Delta DV-update shape): instead
         of rewriting every file holding a match, ONE commit marks the
@@ -2552,200 +2621,51 @@ class SnapshotTable:
         bucket rewrite is a MERGE with a tombstone, not an update —
         the row would change identity and physical placement);
         unknown columns raise up front."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"update_where: mode must be 'cow' or 'mor', got {mode!r}"
-            )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._update_mor_once(
-                        predicate, assignments, properties
-                    )
-                return self._update_once(predicate, assignments, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"update_where lost the commit race {max_retries} times"
-        ) from last
+        _check_mode("update_where", mode)
 
-    def _update_mor_once(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        properties: dict | None,
-    ) -> int:
-        """Merge-on-read UPDATE: matched positions become deletion
-        vectors, the updated rows append as new files, both in ONE
-        commit (atomic — a reader sees pre-update or post-update,
-        never a dropped or doubled row). Updated rows keep their keys,
-        so they land in the buckets the dv flips already touch."""
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        if not assignments:
-            raise ValueError(
-                "update_where: empty assignments (a no-op rewrite "
-                "would still burn I/O and a history entry)"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        schema = self._schema_of(base_raw)
-        frozen = set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
-        bad = sorted(set(assignments) & frozen)
-        if bad:
-            raise ValueError(
-                f"update_where: cannot assign key/order/bucket "
-                f"columns {bad} (use merge with a new row instead)"
-            )
-        unknown = sorted(set(assignments) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {unknown}"
-            )
-        base_bb = self._by_bucket(base_id)
-        cand, _kept = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id
-        matched = (
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                schema, keep_meta=True,
-            )
-            .filter(F.coalesce(F.expr(predicate), F.lit(False)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            updated = self._with_bucket(
-                matched.drop("__fname", "__pos")
-            ).withColumns(
-                {
-                    col: F.expr(expr).cast(schema[col].dataType)
-                    for col, expr in assignments.items()
-                }
-            )
-            touched = sorted(
-                r["__bucket"]
-                for r in updated.select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id
-            new_files = self._stage_rewrite(updated, touched)
-            props = dict(properties or {})
-            props.setdefault("update.predicate", predicate)
-            props.setdefault("update.columns", sorted(assignments))
-            props.setdefault("update.mode", "mor")
-            # the predicate IS the read set — see _rebase_commit
-            props["read.predicate"] = predicate
-            return self._commit_dv(
-                base_id, base_raw, base_bb, cand,
-                matched.select("__fname", "__pos"), props,
-                extra_files=new_files, operation="update",
-                rebase_ok=True,
-            )
-        finally:
-            matched.unpersist()
-
-    def _update_once(
-        self,
-        predicate: str,
-        assignments: dict[str, str],
-        properties: dict | None,
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        if not assignments:
-            raise ValueError(
-                "update_where: empty assignments (a no-op rewrite "
-                "would still burn I/O and a history entry)"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        schema = self._schema_of(base_raw)
-        frozen = set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
-        bad = sorted(set(assignments) & frozen)
-        if bad:
-            raise ValueError(
-                f"update_where: cannot assign key/order/bucket "
-                f"columns {bad} (use merge with a new row instead)"
-            )
-        unknown = sorted(set(assignments) - set(schema.fieldNames()))
-        if unknown:
-            raise ValueError(
-                f"update_where: unknown columns {unknown}"
-            )
-        base_bb = self._by_bucket(base_id)
-        cand, kept_files = self._split_candidates(
-            base_bb, predicate_bounds(predicate)
-        )
-        if not cand:
-            return base_id
-        cur = self._with_bucket(
-            self._read_entries(
-                [f for fs in cand.values() for f in fs],
-                schema, spark=self.spark,
-            )
-        ).withColumn(
-            "__hit", F.coalesce(F.expr(predicate), F.lit(False))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            touched = sorted(
-                r["__bucket"]
-                for r in cur.filter("__hit")
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            if not touched:
-                return base_id
-            # SQL UPDATE semantics: every SET expression evaluates
-            # against the PRE-update row — withColumns applies all
-            # assignments in ONE projection, so {'a': 'b', 'b': 'a'}
-            # is a swap, not dict-order-dependent (review r11).
-            rows = (
-                cur.filter(F.col("__bucket").isin(touched))
-                .withColumns(
-                    {
-                        col: F.when(
-                            F.col("__hit"),
-                            F.expr(expr).cast(schema[col].dataType),
-                        ).otherwise(F.col(col))
-                        for col, expr in assignments.items()
-                    }
+        def validate(schema: T.StructType) -> None:
+            if not assignments:
+                raise ValueError(
+                    "update_where: empty assignments (a no-op rewrite "
+                    "would still burn I/O and a history entry)"
                 )
-                .drop("__hit")
+            frozen = (
+                set(self.key_cols) | {self.order_col} | set(self.bucket_cols)
             )
-            new_files = self._stage_rewrite(rows, touched)
-        finally:
-            cur.unpersist()
-        touched_new: dict[int, list[dict]] = {
-            bkt: list(kept_files.get(bkt, [])) for bkt in touched
-        }
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("update.predicate", predicate)
-        props.setdefault("update.columns", sorted(assignments))
-        # the predicate IS the read set — see _rebase_commit
-        props["read.predicate"] = predicate
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="update", base_id=base_id, properties=props,
-            rebase_ok=True,
+            bad = sorted(set(assignments) & frozen)
+            if bad:
+                raise ValueError(
+                    f"update_where: cannot assign key/order/bucket "
+                    f"columns {bad} (use merge with a new row instead)"
+                )
+            unknown = sorted(set(assignments) - set(schema.fieldNames()))
+            if unknown:
+                raise ValueError(
+                    f"update_where: unknown columns {unknown}"
+                )
+
+        spec = _RowLevel(
+            operation="update",
+            props={
+                "update.predicate": predicate,
+                "update.columns": sorted(assignments),
+            },
+            mode_prop="update.mode",
+            predicate=predicate,
+            validate=validate,
+            # SQL UPDATE semantics: every SET expression evaluates
+            # against the PRE-update row — the pipeline applies all
+            # assignments in ONE withColumns projection, so
+            # {'a': 'b', 'b': 'a'} is a swap, not dict-order-dependent
+            # (review r11).
+            become=lambda schema: {
+                col: F.expr(expr).cast(schema[col].dataType)
+                for col, expr in assignments.items()
+            },
+        )
+        return _retry_cas(
+            "update_where", max_retries,
+            lambda: self._row_level_once(spec, mode == "mor", properties),
         )
 
     def delete_keys(
@@ -2761,13 +2681,12 @@ class SnapshotTable:
         key LIST: the deletion set can be millions of ids and never
         touches the driver).
 
-        Pruning is by LAYOUT, not stats: the keys hash to their
-        physical buckets through Spark's own hash (bucket ids — at
-        most ``n_buckets`` integers — are the only thing collected),
-        so only those buckets' files are read; buckets where no key
-        actually matched carry by reference; matches are NULL-SAFE on
-        every key column (a NULL key component deletes rows with the
-        same NULL — the eqNullSafe lesson from the dedup family).
+        Pruning is by LAYOUT, not stats (the row-level pipeline's
+        keyed candidate choice — module docstring): the keys hash to
+        their physical buckets through Spark's own hash, so only
+        those buckets' files are read. Matches are NULL-SAFE on every
+        key column (a NULL key component deletes rows with the same
+        NULL — the eqNullSafe lesson from the dedup family).
 
         ``mode="mor"`` (round 14) writes deletion vectors instead of
         rewriting files — see :meth:`delete_where`; for the keyed
@@ -2782,202 +2701,47 @@ class SnapshotTable:
                 f"delete_keys: keys frame is missing key columns "
                 f"{missing}"
             )
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"delete_keys: mode must be 'cow' or 'mor', got {mode!r}"
-            )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                if mode == "mor":
-                    return self._delete_keys_mor_once(keys_df, properties)
-                return self._delete_keys_once(keys_df, properties)
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"delete_keys lost the commit race {max_retries} times"
-        ) from last
+        _check_mode("delete_keys", mode)
 
-    def _delete_keys_mor_once(
-        self, keys_df: DataFrame, properties: dict | None
-    ) -> int:
-        """Merge-on-read keyed delete: bucket-prune by the keys' own
-        layout hash (the :meth:`_delete_keys_once` prelude), then a
-        null-safe LEFT SEMI join marks matched positions and
-        :meth:`_commit_dv` writes them as one sidecar — O(matched
-        rows) written, zero data files rewritten."""
-        from pyspark import StorageLevel
+        def frame(schema: T.StructType, pin) -> DataFrame:
+            # CAST the keys to the TABLE's key types before hashing AND
+            # matching: Spark's hash is type-sensitive (hash(7 as int)
+            # != hash(7 as long)), so an int-typed keys frame against a
+            # long-keyed table would prune the wrong buckets and
+            # SILENTLY DELETE NOTHING — the same alignment read_matching
+            # applies (review r11). Pinned: the deduped deletion set
+            # feeds the bucket-target collect AND the match join;
+            # without the pin a nondeterministic keys lineage could
+            # hash one version and join another.
+            return pin(
+                keys_df.select(
+                    *[
+                        F.col(k).cast(schema[k].dataType).alias(k)
+                        for k in self.key_cols
+                    ]
+                ).dropDuplicates(self.key_cols)
+            )
 
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        keys = (
-            keys_df.select(
-                *[
-                    F.col(k).cast(schema[k].dataType).alias(k)
-                    for k in self.key_cols
-                ]
-            )
-            .dropDuplicates(self.key_cols)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(keys)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            if not cand:
-                return base_id
+        def match(rows: DataFrame, keys: DataFrame) -> DataFrame:
             marked = keys.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
+                *[F.col(k).alias(f"__k_{k}") for k in self.key_cols],
+                F.lit(True).alias("__hit"),
             )
-            cond = None
-            for k in self.key_cols:
-                c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-                cond = c if cond is None else (cond & c)
-            matched = (
-                self._read_entries(
-                    [f for fs in cand.values() for f in fs],
-                    schema,
-                    spark=keys_df.sparkSession,
-                    keep_meta=True,
-                )
-                .join(marked, cond, "left_semi")
-                .select("__fname", "__pos")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                props = dict(properties or {})
-                props.setdefault("delete.mode", "mor")
-                # the PROBED bucket set (matched or not) — the rebase
-                # overlap check validates reads too (write-skew guard)
-                props["read.buckets"] = [int(b) for b in target]
-                return self._commit_dv(
-                    base_id, base_raw, base_bb, cand, matched, props,
-                    rebase_ok=True,  # keyed read set — bucket-contained
-                )
-            finally:
-                matched.unpersist()
-        finally:
-            keys.unpersist()
+            return rows.join(
+                marked, self._null_safe_keys("__k_"), "left"
+            ).withColumn("__hit", F.col("__hit").isNotNull())
 
-    def _delete_keys_once(
-        self, keys_df: DataFrame, properties: dict | None
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
-            raise ValueError(
-                f"snapshot table {self.table_dir}: no commits"
-            )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        # CAST the keys to the TABLE's key types before hashing AND
-        # matching: Spark's hash is type-sensitive (hash(7 as int) !=
-        # hash(7 as long)), so an int-typed keys frame against a
-        # long-keyed table would prune the wrong buckets and SILENTLY
-        # DELETE NOTHING — the same alignment read_matching applies
-        # (review r11). Persisted: the deduped deletion set feeds the
-        # bucket-target collect AND the match join; without the pin a
-        # nondeterministic keys lineage could hash one version and
-        # join another.
-        from pyspark import StorageLevel as _SL
-
-        keys = (
-            keys_df.select(
-                *[
-                    F.col(k).cast(schema[k].dataType).alias(k)
-                    for k in self.key_cols
-                ]
-            )
-            .dropDuplicates(self.key_cols)
-            .persist(_SL.MEMORY_AND_DISK)
+        spec = _RowLevel(
+            operation="delete",
+            props={},
+            mode_prop="delete.mode",
+            touched_prop="delete.keys.buckets",
+            frame=frame,
+            match=match,
         )
-        try:
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(keys)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
-            )
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            if not cand:
-                return base_id
-            marked = keys.select(
-                *[F.col(k).alias(f"__k_{k}") for k in self.key_cols]
-            ).withColumn("__hit", F.lit(True))
-            cond = None
-            for k in self.key_cols:
-                c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-                cond = c if cond is None else (cond & c)
-            cur = (
-                self._with_bucket(
-                    self._read_entries(
-                        [f for fs in cand.values() for f in fs],
-                        schema,
-                        # the keys frame's own session — inside
-                        # foreachBatch the micro-batch belongs to a
-                        # cloned session and a join must not cross
-                        # sessions (the _prepare_merge rule)
-                        spark=keys_df.sparkSession,
-                    )
-                )
-                .join(marked, cond, "left")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            try:
-                touched = sorted(
-                    r["__bucket"]
-                    for r in cur.filter("__hit")
-                    .select("__bucket")
-                    .distinct()
-                    .collect()
-                )
-                if not touched:
-                    return base_id
-                survivors = cur.filter(
-                    F.col("__bucket").isin(touched)
-                    & F.col("__hit").isNull()
-                ).drop("__hit", *[f"__k_{k}" for k in self.key_cols])
-                new_files = self._stage_rewrite(survivors, touched)
-            finally:
-                cur.unpersist()
-        finally:
-            keys.unpersist()
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("delete.keys.buckets", len(touched))
-        # the PROBED bucket set (matched or not) — the rebase overlap
-        # check validates reads too (write-skew guard)
-        props["read.buckets"] = [int(b) for b in target]
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="delete", base_id=base_id, properties=props,
-            rebase_ok=True,
+        return _retry_cas(
+            "delete_keys", max_retries,
+            lambda: self._row_level_once(spec, mode == "mor", properties),
         )
 
     def merge_into(
@@ -3013,11 +2777,12 @@ class SnapshotTable:
         with duplicate keys (merge-on-read appends) each receive the
         action.
 
-        Cost discipline (the :meth:`delete_keys` layout prune): every
-        source row — matched or inserted — hashes to a source-key
-        bucket, so only those buckets' files are read, only buckets
-        with an actual action rewrite, everything else carries by
-        reference; matching is NULL-SAFE on every key column.
+        Cost discipline is the row-level pipeline's keyed layout
+        prune (module docstring): every source row — matched or
+        inserted — hashes to a source-key bucket, so only those
+        buckets' files are read and only buckets with an actual
+        action or insert are touched; matching is NULL-SAFE on every
+        key column.
 
         ``mode="mor"`` (round 14 — the deletion-vector MERGE): fired
         matched rows become position deletes, their replacements and
@@ -3025,10 +2790,7 @@ class SnapshotTable:
         O(source-affected rows), never O(touched files). The daily
         upsert batch against a 100-TB fact table stops rewriting the
         buckets it grazes."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(
-                f"merge_into: mode must be 'cow' or 'mor', got {mode!r}"
-            )
+        _check_mode("merge_into", mode)
         if when_matched not in ("update", "delete", "ignore"):
             raise ValueError(
                 f"merge_into: when_matched={when_matched!r} not in "
@@ -3039,57 +2801,33 @@ class SnapshotTable:
                 f"merge_into: when_not_matched={when_not_matched!r} "
                 "not in ('insert', 'ignore')"
             )
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                return self._merge_into_once(
-                    source, when_matched, matched_condition,
-                    when_not_matched, properties, mor=(mode == "mor"),
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"merge_into lost the commit race {max_retries} times"
-        ) from last
-
-    def _merge_into_once(
-        self,
-        source: DataFrame,
-        when_matched: str,
-        matched_condition: str | None,
-        when_not_matched: str,
-        properties: dict | None,
-        mor: bool = False,
-    ) -> int:
-        from pyspark import StorageLevel
-
-        base_id = self.current_id()
-        if base_id is None:
+        if self.current_id() is None:
             raise ValueError(
                 f"snapshot table {self.table_dir}: no commits — "
                 "bootstrap with append()/merge(), then MERGE INTO"
             )
-        base_raw = self._raw_meta(base_id)
-        self._adopt_layout(base_raw)
-        base_bb = self._by_bucket(base_id)
-        schema = self._schema_of(base_raw)
-        missing = [c for c in schema.names if c not in source.columns]
-        if missing:
-            raise ValueError(
-                f"merge_into: source is missing table columns "
-                f"{missing} (full rows required — see docstring)"
+
+        def validate(schema: T.StructType) -> None:
+            missing = [c for c in schema.names if c not in source.columns]
+            if missing:
+                raise ValueError(
+                    f"merge_into: source is missing table columns "
+                    f"{missing} (full rows required — see docstring)"
+                )
+
+        def frame(schema: T.StructType, pin) -> DataFrame:
+            # align to the table schema (types cast — the type-
+            # sensitive hash lesson) and pin: the source feeds the
+            # cardinality check, the bucket-target collect, the match
+            # join, and the insert anti-join
+            src = pin(
+                source.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in schema.fields
+                    ]
+                )
             )
-        # align to the table schema (types cast — the type-sensitive
-        # hash lesson) and pin: the source feeds the cardinality
-        # check, the bucket-target collect, the match join, and the
-        # insert anti-join
-        src = source.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
             dup = (
                 src.groupBy(*self.key_cols)
                 .agg(F.count(F.lit(1)).alias("__n"))
@@ -3103,33 +2841,24 @@ class SnapshotTable:
                     "MERGE requires at most one source row per "
                     "target key"
                 )
-            target = sorted(
-                r["__bucket"]
-                for r in self._with_bucket(src)
-                .select("__bucket")
-                .distinct()
-                .collect()  # ≤ n_buckets ids — metadata, never data
+            return src
+
+        def match(rows: DataFrame, src: DataFrame) -> DataFrame:
+            names = src.columns
+            joined = rows.join(
+                src.select(
+                    *[F.col(c).alias(f"__s_{c}") for c in names],
+                    F.lit(True).alias("__s_present"),
+                ),
+                self._null_safe_keys("__s_"),
+                "left",
             )
-            cand = {
-                b: self._entries(base_bb[b])
-                for b in target
-                if self._loc_n(base_bb.get(b, []))
-            }
-            cand_ents = [f for fs in cand.values() for f in fs]
-            base_rows = self._with_bucket(
-                self._read_entries(
-                    cand_ents, schema, spark=source.sparkSession,
-                    keep_meta=mor,
+            if matched_condition is None:
+                joined = joined.withColumn(
+                    "__hit",
+                    F.coalesce(F.col("__s_present"), F.lit(False)),
                 )
-            )
-            s_pref = src.select(
-                *[F.col(c).alias(f"__s_{c}") for c in schema.names],
-                F.lit(True).alias("__s_present"),
-            )
-            joined = base_rows.join(
-                s_pref, self._null_safe_keys("__s_"), "left"
-            )
-            if matched_condition is not None:
+            else:
                 # The condition resolves against a frame exposing
                 # ONLY the t_/s_ prefixed names — the original row is
                 # packed into a struct first, so a table that itself
@@ -3137,178 +2866,57 @@ class SnapshotTable:
                 # documented prefix syntax ambiguous (review r12).
                 cview = joined.select(
                     F.struct(*joined.columns).alias("__row"),
-                    *[
-                        F.col(c).alias(f"t_{c}")
-                        for c in schema.names
-                    ],
-                    *[
-                        F.col(f"__s_{c}").alias(f"s_{c}")
-                        for c in schema.names
-                    ],
+                    *[F.col(c).alias(f"t_{c}") for c in names],
+                    *[F.col(f"__s_{c}").alias(f"s_{c}") for c in names],
                 )
                 fired = F.coalesce(
                     F.expr(matched_condition), F.lit(False)
                 )
                 joined = cview.withColumn(
-                    "__act",
+                    "__hit",
                     F.coalesce(F.col("__row.__s_present"), F.lit(False))
                     & fired,
-                ).select("__row.*", "__act")
-            else:
-                joined = joined.withColumn(
-                    "__act",
-                    F.coalesce(F.col("__s_present"), F.lit(False)),
-                )
-            joined = joined.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                if when_matched == "ignore":
-                    # matched rows pass through untouched — a match
-                    # alone must not force a bucket rewrite
-                    act_buckets: set = set()
-                else:
-                    act_buckets = {
-                        r["__bucket"]
-                        for r in joined.filter("__act")
-                        .select("__bucket")
-                        .distinct()
-                        .collect()
-                    }
-                if when_not_matched == "insert":
-                    inserts = src.join(
-                        joined.select(
-                            *[
-                                F.col(k).alias(f"__b_{k}")
-                                for k in self.key_cols
-                            ]
-                        ).dropDuplicates(),
-                        self._null_safe_keys("__b_"),
-                        "left_anti",
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    ins_buckets = {
-                        r["__bucket"]
-                        for r in self._with_bucket(inserts)
-                        .select("__bucket")
-                        .distinct()
-                        .collect()
-                    }
-                else:
-                    inserts = None
-                    ins_buckets = set()
-                touched = sorted(act_buckets | ins_buckets)
-                if not touched:
-                    return base_id  # nothing fired anywhere — no-op
-                if mor:
-                    # deletion-vector MERGE: fired matched rows are
-                    # position deletes; replacements + inserts append
-                    # as new files; ONE commit carries both
-                    to_stage = None
-                    if when_matched == "update":
-                        to_stage = joined.filter("__act").select(
-                            "__bucket",
-                            *[
-                                F.col(f"__s_{c}").alias(c)
-                                for c in schema.names
-                            ],
-                        )
-                    if inserts is not None:
-                        ins_b = self._with_bucket(inserts)
-                        to_stage = (
-                            ins_b
-                            if to_stage is None
-                            else to_stage.unionByName(ins_b)
-                        )
-                    stage_buckets = sorted(
-                        (
-                            act_buckets
-                            if when_matched == "update"
-                            else set()
-                        )
-                        | ins_buckets
-                    )
-                    new_files = (
-                        self._stage_rewrite(to_stage, stage_buckets)
-                        if to_stage is not None and stage_buckets
-                        else []
-                    )
-                    if when_matched == "ignore":
-                        positions = source.sparkSession.createDataFrame(
-                            [], "__fname string, __pos long"
-                        )
-                    else:
-                        positions = joined.filter("__act").select(
-                            "__fname", "__pos"
-                        )
-                    props = dict(properties or {})
-                    props.setdefault(
-                        "merge_into.when_matched", when_matched
-                    )
-                    props.setdefault(
-                        "merge_into.when_not_matched", when_not_matched
-                    )
-                    props.setdefault("merge_into.mode", "mor")
-                    # every source key's bucket, matched or not — the
-                    # rebase overlap check validates reads too
-                    # (write-skew guard)
-                    props["read.buckets"] = [int(b) for b in target]
-                    if matched_condition is not None:
-                        props.setdefault(
-                            "merge_into.matched_condition",
-                            matched_condition,
-                        )
-                    return self._commit_dv(
-                        base_id, base_raw, base_bb, cand, positions,
-                        props, extra_files=new_files,
-                        operation="merge_into", rebase_ok=True,
-                    )
-                if when_matched == "update":
-                    kept = joined.select(
-                        "__bucket",
-                        *[
-                            F.when(
-                                F.col("__act"), F.col(f"__s_{c}")
-                            )
-                            .otherwise(F.col(c))
-                            .alias(c)
-                            for c in schema.names
-                        ],
-                    )
-                elif when_matched == "delete":
-                    kept = joined.filter(~F.col("__act")).select(
-                        "__bucket", *schema.names
-                    )
-                else:  # ignore — matched rows pass through untouched
-                    kept = joined.select("__bucket", *schema.names)
-                rows = kept.filter(F.col("__bucket").isin(touched))
-                if inserts is not None:
-                    rows = rows.unionByName(
-                        self._with_bucket(inserts).filter(
-                            F.col("__bucket").isin(touched)
-                        )
-                    )
-                new_files = self._stage_rewrite(rows, touched)
-            finally:
-                joined.unpersist()
-                if inserts is not None:
-                    inserts.unpersist()
-        finally:
-            src.unpersist()
-        touched_new: dict[int, list[dict]] = {bkt: [] for bkt in touched}
-        for f in new_files:
-            touched_new[f["bucket"]].append(f)
-        props = dict(properties or {})
-        props.setdefault("merge_into.when_matched", when_matched)
-        props.setdefault("merge_into.when_not_matched", when_not_matched)
-        if matched_condition is not None:
-            props.setdefault(
-                "merge_into.matched_condition", matched_condition
+                ).select("__row.*", "__hit")
+            if when_matched == "ignore":
+                # matched rows pass through untouched — a match alone
+                # must not force a bucket rewrite
+                joined = joined.withColumn("__hit", F.lit(False))
+            return joined
+
+        def inserts(src: DataFrame, rows: DataFrame) -> DataFrame:
+            return src.join(
+                rows.select(
+                    *[F.col(k).alias(f"__b_{k}") for k in self.key_cols]
+                ).dropDuplicates(),
+                self._null_safe_keys("__b_"),
+                "left_anti",
             )
-        # every source key's bucket, matched or not — the rebase
-        # overlap check validates reads too (write-skew guard)
-        props["read.buckets"] = [int(b) for b in target]
-        return self._commit_delta(
-            base_raw["schema"], base_bb, touched_new,
-            operation="merge_into", base_id=base_id, properties=props,
-            rebase_ok=True,
+
+        props = {
+            "merge_into.when_matched": when_matched,
+            "merge_into.when_not_matched": when_not_matched,
+        }
+        if matched_condition is not None:
+            props["merge_into.matched_condition"] = matched_condition
+        spec = _RowLevel(
+            operation="merge_into",
+            props=props,
+            mode_prop="merge_into.mode",
+            validate=validate,
+            frame=frame,
+            match=match,
+            become=(
+                (lambda schema: {
+                    c: F.col(f"__s_{c}") for c in schema.names
+                })
+                if when_matched == "update"
+                else None
+            ),
+            inserts=inserts if when_not_matched == "insert" else None,
+        )
+        return _retry_cas(
+            "merge_into", max_retries,
+            lambda: self._row_level_once(spec, mode == "mor", properties),
         )
 
     def _null_safe_keys(self, pref: str):
@@ -4785,8 +4393,8 @@ class SnapshotTable:
         exact)."""
         if new_n_buckets < 1:
             raise ValueError("rebucket: need at least one bucket")
-        last: Exception | None = None
-        for _ in range(max_retries):
+
+        def attempt() -> int:
             base_id = self.current_id()
             if base_id is None:
                 raise ValueError(
@@ -4811,16 +4419,12 @@ class SnapshotTable:
                 .parquet(staging)
             )
             new_files = self._promote_staged(staging, run)
-            try:
-                return self._commit(
-                    cur.schema.json(), [], new_files,
-                    operation="rebucket", base_id=base_id,
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"rebucket lost the commit race {max_retries} times"
-        ) from last
+            return self._commit(
+                cur.schema.json(), [], new_files,
+                operation="rebucket", base_id=base_id,
+            )
+
+        return _retry_cas("rebucket", max_retries, attempt)
 
     # ------------------------------------------------------------ maintain
 
@@ -4848,8 +4452,8 @@ class SnapshotTable:
         ``self.bucket_cols`` / ``self.bloom_cols`` /
         ``self._retired`` (always derived from ``base_raw``, never
         from handle state — retry-safe)."""
-        last: Exception | None = None
-        for _ in range(max_retries):
+
+        def attempt() -> int:
             base_id = self.current_id()
             if base_id is None:
                 raise ValueError(
@@ -4864,17 +4468,13 @@ class SnapshotTable:
                 schema_json = self._stamp_fids_json(schema_json)
             st = T.StructType.fromJson(json.loads(schema_json))
             new_schema = fn(st, base_raw)
-            try:
-                return self._commit_delta(
-                    new_schema.json(), self._by_bucket(base_id), {},
-                    operation="evolve", base_id=base_id,
-                    properties={"evolve.op": label},
-                )
-            except CommitConflict as e:  # re-plan on the new current
-                last = e
-        raise RuntimeError(
-            f"{label}: lost the commit race {max_retries} times"
-        ) from last
+            return self._commit_delta(
+                new_schema.json(), self._by_bucket(base_id), {},
+                operation="evolve", base_id=base_id,
+                properties={"evolve.op": label},
+            )
+
+        return _retry_cas(f"{label}:", max_retries, attempt)
 
     def rename_column(
         self, old: str, new: str, max_retries: int = 5
