@@ -1,24 +1,34 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: the bench sections at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
-  {"metric": "headline_total", "value": <sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>,
-   "streaming": {...}, "streaming_total": <sec>,
-   "showcase": {...}, "showcase_total": <sec>, "all_total": <sec>}
+A query belongs to a section through one ``bench:<section>`` tag in
+its own ``@register(...)``; ``SECTIONS`` below fixes the section names
+and their output order. Within a section queries run in registry
+order. Staged queries (``staged`` tag, out of the driver contract)
+are timed from ``registry.staged_specs()`` in the ``staged_*``
+sections.
 
-Sections (round 3 — see BASELINE.md "Bench methodology"):
-  * ``queries``  — the relational headline: batch plan quality only.
-  * ``streaming``— Structured Streaming pipelines, timed separately
-    with a dedicated pre-created checkpoint root and a one-shot
-    untimed warm-up of the streaming machinery.  Streaming numbers
-    measure micro-batch/state-store setup + execution, not Catalyst
-    plan quality, and were the dominant noise source in the r02
-    driver bench (st_tumbling_window 2.3→6.5 s with zero code
-    change); isolating them keeps the headline comparable across
-    rounds.
-  * ``showcase`` — the ``bench``-tagged TPC-H join-order showcases
-    (Q1 is already the headline's e1_pricing_summary).
+Output: the full payload (per-query timings and ``<section>_total``
+for every section, then ``all_total``) goes to ``bench_out.json``;
+stdout gets one JSON line per section, then the compact contract line
+``{"metric": "headline_total", "value", "unit", "queries", "sf",
+"sections": {section: total, ..., "all"}, "fixtures", "full_payload"}``.
+
+Sections (see BASELINE.md "Bench methodology"):
+  * ``headline`` (payload key ``queries``): batch plan quality only.
+  * ``streaming``: Structured Streaming pipelines, run last with a
+    dedicated checkpoint root and an untimed warm-up. They measure
+    micro-batch/state-store setup, not plan quality, and were the
+    dominant noise source in the r02 driver bench, so they stay out
+    of the headline.
+  * ``showcase``: the TPC-H join-order suite (Q1 sits in the headline).
+  * ``pipeline``, ``additions``, ``additions_rN``: each round's
+    registrations get their own section, frozen afterwards, so every
+    section is a series comparable across rounds; a later round never
+    moves a query between sections.
+  * ``staged_rN``: staged queries, timed so the staged→registered
+    series continues; left out of ``all_total`` because they are not
+    part of the registered inventory.
 
 Execution notes: each query materializes via the noop sink (full
 computation, no write cost, nothing collected to the driver). A
@@ -30,6 +40,7 @@ scale show ±2× OS/JIT noise on identical plans.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -40,194 +51,35 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from turnover_odata_etl_spark.plans import registry  # noqa: E402
+from turnover_odata_etl_spark.plans.reference import (  # noqa: E402
+    flagship_turnover,
+)
+from turnover_odata_etl_spark.plans.streaming_plans import (  # noqa: E402
+    st_tumbling_window,
+)
 from turnover_odata_etl_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    "flagship_turnover",
-    "e1_pricing_summary",
-    "e3_star_join_revenue",
-    "e4_asof_join",
-    "e5_window_running_sum",
-    "e6_topk_per_group",
-    "t_tfidf_topterms",
-    "t_bpe_tokens",
-    "d_minhash_lsh_neardup",
-    "d_ngram_jaccard",
-    "d_embedding_neardup",
-    "s_knn_bruteforce",
-    "s_knn_ivf",
-]
-
-STREAMING = [
-    "st_tumbling_window",
-    "st_session_window",
-    "st_incremental_upsert",
-]
-
-# Round-4 capstone: the composed pretraining pipeline (quality →
-# decontaminate → dedup → pack) as one plan — its own section so the
-# headline/streaming/showcase series stay comparable across rounds.
-PIPELINE = [
-    "t_pretrain_pipeline",
-]
-
-# Round-5 capability additions, their own section so the established
-# headline/streaming/showcase/pipeline series stay comparable.
-# The two codec queries time the full decode ladder at sf0.1 (PNG:
-# zlib inflate + unfilter; WAV: RIFF parse + framed features), giving
-# the round series decode-throughput evidence, not just correctness.
-ADDITIONS = [
-    "t_bpe_train",
-    "s_warc_ingest",
-    "m_png_decode_features",
-    "m_wav_decode_features",
-]
-
-# Round-6 capability additions — again their own section (the r05
-# ``additions`` series stays frozen for cross-round comparison).
-# JPEG times the heaviest codec rung; bpe_apply the corpus encode;
-# warc_to_pretrain the full ingest->packed-sequences composition;
-# phash the decode->hash->band-join image dedup pipeline.
-ADDITIONS_R6 = [
-    "m_jpeg_decode_features",
-    "t_bpe_apply",
-    "s_warc_to_pretrain",
-    "d_phash_neardup",
-]
-
-# Round-7 registrations: the two codec-path oracle queries, the BPE
-# sequence output, and the snapshot-commit merge (time travel).
-ADDITIONS_R7 = [
-    "m_png_adam7_decode_features",
-    "m_adpcm_decode_features",
-    "t_bpe_tokenize_ids",
-    "st_snapshot_merge",
-]
-
-# Round-8 registrations (plans/roundeight.py — registered this round
-# per the r07 cap ruling; benched as staged_r8 in BENCH_r07 for the
-# staged→registered delta series, registry-backed from r08 on). The
-# r07 staged list missed m_mixed_image_decode_features (ADVICE r07);
-# it is timed here from round 8 on.
-ADDITIONS_R8 = [
-    "m_gif_decode_features",
-    "m_g711_decode_features",
-    "m_flac_decode_features",
-    "m_tiff_decode_features",
-    "m_mixed_image_decode_features",
-    "s_snapshot_pruned_read",
-    "s_snapshot_changes",
-    "s_snapshot_incremental_agg",
-    "d_exact_substr_spans",
-]
-
-# Round-10 registrations (plans/roundten.py — registered round 11 per
-# the r10 cap ruling; benched as staged_r10 in BENCH_r10 for the
-# staged→registered delta series, registry-backed from r11 on).
-ADDITIONS_R10 = [
-    "s_snapshot_append_compact",
-    "t_dsir_importance",
-    "d_semdedup_incremental",
-]
-
-# Round-11 registrations (plans/roundeleven.py — registered round 12
-# per the r11 cap ruling; benched as staged_r11 in BENCH_r11 for the
-# staged→registered delta series, registry-backed from r12 on).
-ADDITIONS_R11 = [
-    "t_langid_confusion",
-    "s_snapshot_dml_lifecycle",
-]
-
-# Round-12 registrations (plans/roundtwelve.py — registered round 13
-# per the r12 cap ruling; benched as staged_r12 in BENCH_r12 for the
-# staged→registered delta series, registry-backed from r13 on).
-ADDITIONS_R12 = [
-    "t_bm25_topk",
-    "s_knn_ivf_persistent",
-    "s_bm25_incremental",
-    "s_snapshot_zorder_skipping",
-    "s_snapshot_merge_into",
-]
-
-# Round-13 registrations (plans/roundthirteen.py — registered round 14
-# per the r13 cap ruling; benched as staged_r13 in BENCH_r13 for the
-# staged→registered delta series, registry-backed from r14 on).
-ADDITIONS_R13 = [
-    "s_snapshot_agg_stats",
-    "s_snapshot_bloom_pruned_delete",
-    "s_join_cobucketed",
-    "s_snapshot_history",
-]
-
-# Round-14 registrations (plans/roundfourteen.py — registered round
-# 15 per the r14 cap ruling; benched as staged_r14 in BENCH_r14 for
-# the staged→registered delta series, registry-backed from r15 on).
-ADDITIONS_R14 = [
-    "s_snapshot_dv_delete",
-    "s_knn_ivf_refresh",
-    "s_snapshot_wap_publish",
-]
-
-# Round-15 registrations (plans/roundfifteen.py — registered round
-# 16 per the r15 cap ruling; benched as staged_r15 in BENCH_r15 for
-# the staged→registered delta series, registry-backed from r16 on).
-ADDITIONS_R15 = [
-    "t_quality_classifier",
-    "s_snapshot_tag_gc",
-    "s_group_wap_rebuild",
-]
-
-# Round-16 STAGED queries (plans/roundsixteen.py — held for a cap
-# ruling, registry frozen at 221; timed here as staged_r16 so the
-# staged→registered delta series continues when they register).
-STAGED_R16 = [
-    "s_schema_evolution_fieldid",
-    "t_curation_pipeline",
-    "s_knn_ivfpq",
-]
-
-# Round-9 registrations (plans/roundnine.py — registered round 10 per
-# the r09 cap ruling; benched as staged_r9 in BENCH_r08/r09 for the
-# staged→registered delta series, registry-backed from r10 on).
-ADDITIONS_R9 = [
-    "m_avi_decode_features",
-    "d_exact_substr_clean",
-    "s_snapshot_lifecycle",
-    "s_snapshot_skipping",
-    "st_snapshot_ivm",
-    "s_odata_delta_sync",
-    "d_semdedup_kmeans",
-    "t_byte_entropy",
-    "d_incremental_neardup",
-    "g_triangle_count",
-]
+SECTIONS = (
+    "headline", "streaming", "showcase", "pipeline", "additions",
+    "additions_r6", "additions_r7", "additions_r8", "additions_r9",
+    "additions_r10", "additions_r11", "additions_r12", "additions_r13",
+    "additions_r14", "additions_r15", "staged_r16",
+)
 
 
+def bench_specs() -> dict[str, registry.QuerySpec]:
+    """Registered then staged specs, in registry order."""
+    return {**registry.all_specs(), **registry.staged_specs()}
 
-# The full TPC-H-shaped suite (Q1 is the headline's e1_pricing_summary).
-SHOWCASE = [
-    "e6_q2_min_cost_supplier",
-    "e6_q3_shipping_priority",
-    "e6_q4_order_priority",
-    "e6_q5_local_supplier_volume",
-    "e6_q6_forecast_revenue",
-    "e6_q7_volume_shipping",
-    "e6_q8_market_share",
-    "e6_q9_product_profit",
-    "e6_q10_returned_items",
-    "e6_q11_important_stock",
-    "e6_q12_priority_by_returnflag",
-    "e6_q13_customer_distribution",
-    "e6_q14_promo_revenue",
-    "e6_q15_top_supplier",
-    "e6_q16_part_supplier_counts",
-    "e6_q17_small_qty_revenue",
-    "e6_q18_large_volume_customer",
-    "e6_q19_disjunctive_join",
-    "e6_q20_promotion_suppliers",
-    "e6_q21_suppliers_kept_waiting",
-    "e6_q22_global_sales_opportunity",
-]
+
+def section_queries() -> dict[str, list[str]]:
+    """``SECTIONS`` → member names, read from the ``bench:`` tags."""
+    members: dict[str, list[str]] = {s: [] for s in SECTIONS}
+    for name, spec in bench_specs().items():
+        for tag in spec.tags:
+            if tag.startswith("bench:"):
+                members[tag.removeprefix("bench:")].append(name)
+    return members
 
 
 def materialize(df) -> None:
@@ -268,12 +120,33 @@ def time_queries(spark, specs, names, sf_dir, reps, errors, clear_cache=True):
     return timings
 
 
+@contextlib.contextmanager
+def streaming_checkpoint(spark, sf_dir, errors):
+    """Dedicated pre-created checkpoint root (each query still gets
+    its own sub-directory via its unique queryName — avoids per-rep
+    temp-dir create/delete) and an untimed warm-up run so micro-batch
+    planner / state-store init is paid once, not inside the first
+    timed rep."""
+    ckpt_root = tempfile.mkdtemp(prefix="spark_graft_bench_ckpt_")
+    spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt_root)
+    try:
+        try:
+            materialize(st_tumbling_window(spark, sf_dir))  # warm-up
+        except Exception as exc:  # noqa: BLE001 — harness boundary
+            errors["__streaming_warmup__"] = f"{type(exc).__name__}: {exc}"[:500]
+        yield
+    finally:
+        spark.conf.unset("spark.sql.streaming.checkpointLocation")
+        shutil.rmtree(ckpt_root, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     spark = get_spark(app_name="bench")
 
-    specs = registry.all_specs()
+    specs = bench_specs()
+    members = section_queries()
     errors: dict[str, str] = {}
     # warm-up: JVM + codegen + parquet footer caches, plus the Python
     # worker pool (first mapInPandas otherwise pays daemon spawn +
@@ -281,7 +154,7 @@ def main() -> None:
     # best-effort: a broken warm-up query shifts its cost into the
     # first timed rep but must not kill the bench.
     try:
-        materialize(specs["flagship_turnover"].fn(spark, sf_dir))
+        materialize(flagship_turnover(spark, sf_dir))
         spark.range(1000).mapInPandas(
             lambda it: it, "id long"
         ).write.format("noop").mode("overwrite").save()
@@ -290,73 +163,25 @@ def main() -> None:
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
-    timings = time_queries(spark, specs, HEADLINE, sf_dir, reps, errors)
-    showcase = time_queries(spark, specs, SHOWCASE, sf_dir, reps, errors)
-    pipeline = time_queries(spark, specs, PIPELINE, sf_dir, reps, errors)
-    additions = time_queries(spark, specs, ADDITIONS, sf_dir, reps, errors)
-    additions_r6 = time_queries(spark, specs, ADDITIONS_R6, sf_dir, reps, errors)
-    additions_r7 = time_queries(spark, specs, ADDITIONS_R7, sf_dir, reps, errors)
-    additions_r8 = time_queries(spark, specs, ADDITIONS_R8, sf_dir, reps, errors)
-    additions_r9 = time_queries(spark, specs, ADDITIONS_R9, sf_dir, reps, errors)
-    additions_r10 = time_queries(
-        spark, specs, ADDITIONS_R10, sf_dir, reps, errors
-    )
-    additions_r11 = time_queries(
-        spark, specs, ADDITIONS_R11, sf_dir, reps, errors
-    )
-    additions_r12 = time_queries(
-        spark, specs, ADDITIONS_R12, sf_dir, reps, errors
-    )
-    additions_r13 = time_queries(
-        spark, specs, ADDITIONS_R13, sf_dir, reps, errors
-    )
-    additions_r14 = time_queries(
-        spark, specs, ADDITIONS_R14, sf_dir, reps, errors
-    )
-    additions_r15 = time_queries(
-        spark, specs, ADDITIONS_R15, sf_dir, reps, errors
-    )
-    from turnover_odata_etl_spark.plans.roundsixteen import STAGED as _R16
-    staged_specs = {**specs, **_R16}
-    staged_r16 = time_queries(
-        spark, staged_specs, STAGED_R16, sf_dir, reps, errors
-    )
+    # Batch sections first, streaming last inside its checkpoint root.
+    timed: dict[str, dict[str, float]] = {}
+    for section in sorted(SECTIONS, key=lambda s: s == "streaming"):
+        streaming = section == "streaming"
+        with (streaming_checkpoint(spark, sf_dir, errors) if streaming
+              else contextlib.nullcontext()):
+            timed[section] = time_queries(
+                spark, specs, members[section], sf_dir, reps, errors,
+                clear_cache=not streaming,
+            )
 
-    # Streaming: dedicated pre-created checkpoint root (each query
-    # still gets its own sub-directory via its unique queryName —
-    # avoids per-rep temp-dir create/delete) and an untimed warm-up
-    # run so micro-batch planner / state-store init is paid once,
-    # not inside the first timed rep.
-    ckpt_root = tempfile.mkdtemp(prefix="spark_graft_bench_ckpt_")
-    spark.conf.set("spark.sql.streaming.checkpointLocation", ckpt_root)
-    try:
-        try:
-            materialize(specs["st_tumbling_window"].fn(spark, sf_dir))  # warm-up
-        except Exception as exc:  # noqa: BLE001 — harness boundary
-            errors["__streaming_warmup__"] = f"{type(exc).__name__}: {exc}"[:500]
-        streaming = time_queries(
-            spark, specs, STREAMING, sf_dir, reps, errors, clear_cache=False
-        )
-    finally:
-        spark.conf.unset("spark.sql.streaming.checkpointLocation")
-        shutil.rmtree(ckpt_root, ignore_errors=True)
-
-    total = round(sum(timings.values()), 3)
-    streaming_total = round(sum(streaming.values()), 3)
-    showcase_total = round(sum(showcase.values()), 3)
-    pipeline_total = round(sum(pipeline.values()), 3)
-    additions_total = round(sum(additions.values()), 3)
-    additions_r6_total = round(sum(additions_r6.values()), 3)
-    additions_r7_total = round(sum(additions_r7.values()), 3)
-    additions_r8_total = round(sum(additions_r8.values()), 3)
-    additions_r9_total = round(sum(additions_r9.values()), 3)
-    additions_r10_total = round(sum(additions_r10.values()), 3)
-    additions_r11_total = round(sum(additions_r11.values()), 3)
-    additions_r12_total = round(sum(additions_r12.values()), 3)
-    additions_r13_total = round(sum(additions_r13.values()), 3)
-    additions_r14_total = round(sum(additions_r14.values()), 3)
-    additions_r15_total = round(sum(additions_r15.values()), 3)
-    staged_r16_total = round(sum(staged_r16.values()), 3)
+    section_totals = {
+        s: round(sum(timed[s].values()), 3) for s in SECTIONS
+    }
+    section_totals["all"] = round(
+        sum(t for s, t in section_totals.items()
+            if not s.startswith("staged_")),
+        3,
+    )
     # Fixture fingerprint: the driver regenerates /root/testdata
     # between rounds (it did at round-5 start), which silently resets
     # per-query comparability for data-dependent timings (the dedup /
@@ -372,78 +197,25 @@ def main() -> None:
             pass
     payload = {
         "metric": "headline_total",
-        "value": total,
+        "value": section_totals["headline"],
         "unit": "sec",
-        "queries": timings,
+        "queries": timed["headline"],
         "sf": sf,
-        "streaming": streaming,
-        "streaming_total": streaming_total,
-        "showcase": showcase,
-        "showcase_total": showcase_total,
-        "pipeline": pipeline,
-        "pipeline_total": pipeline_total,
-        "additions": additions,
-        "additions_total": additions_total,
-        "additions_r6": additions_r6,
-        "additions_r6_total": additions_r6_total,
-        "additions_r7": additions_r7,
-        "additions_r7_total": additions_r7_total,
-        "additions_r8": additions_r8,
-        "additions_r8_total": additions_r8_total,
-        "additions_r9": additions_r9,
-        "additions_r9_total": additions_r9_total,
-        "additions_r10": additions_r10,
-        "additions_r10_total": additions_r10_total,
-        "additions_r11": additions_r11,
-        "additions_r11_total": additions_r11_total,
-        "additions_r12": additions_r12,
-        "additions_r12_total": additions_r12_total,
-        "additions_r13": additions_r13,
-        "additions_r13_total": additions_r13_total,
-        "additions_r14": additions_r14,
-        "additions_r14_total": additions_r14_total,
-        "additions_r15": additions_r15,
-        "additions_r15_total": additions_r15_total,
-        "staged_r16": staged_r16,
-        "staged_r16_total": staged_r16_total,
-        "all_total": round(
-            total
-            + streaming_total
-            + showcase_total
-            + pipeline_total
-            + additions_total
-            + additions_r6_total
-            + additions_r7_total
-            + additions_r8_total
-            + additions_r9_total
-            + additions_r10_total
-            + additions_r11_total
-            + additions_r12_total
-            + additions_r13_total
-            + additions_r14_total
-            + additions_r15_total,
-            3,
-        ),
-        "fixtures": fixtures,
     }
+    for s in SECTIONS[1:]:  # the headline is "queries" above
+        payload[s] = timed[s]
+        payload[f"{s}_total"] = section_totals[s]
+    payload["all_total"] = section_totals["all"]
+    payload["fixtures"] = fixtures
     if errors:
         payload["errors"] = errors
 
     # Artifact robustness (VERDICT r07 "What's wrong #3"): the driver
-    # captures a bounded TAIL of stdout, and by round 7 the full
-    # payload line had grown past it — the capture truncated the JSON
-    # from the front and the headline section was lost ("parsed":
-    # null). Three layers so that can never happen again:
-    #   1. the FULL payload is written to bench_out.json next to this
-    #      script (the artifact of record for deep dives; UNTRACKED
-    #      since round 16 — it drifted as a working-tree change after
-    #      every driver pass, VERDICT r15 "What's wrong #3");
-    #   2. each section prints as its own small JSON line (any one
-    #      survives a tail capture independently);
-    #   3. the LAST stdout line is a compact contract line — metric /
-    #      value / unit / headline queries / sf / section totals —
-    #      small enough (~1 KB) that a tail capture always keeps it
-    #      intact for the driver's parser.
+    # captures a bounded TAIL of stdout, and once the full payload line
+    # outgrew it the headline was lost. So: (1) the full payload goes to
+    # bench_out.json (untracked: it drifted after every driver pass);
+    # (2) each section prints as its own small JSON line; (3) the LAST
+    # stdout line is a ~1 KB compact contract line the tail always keeps.
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "bench_out.json")
     try:
@@ -452,53 +224,17 @@ def main() -> None:
             fh.write("\n")
     except OSError as exc:
         print(f"  bench_out.json write failed: {exc}", file=sys.stderr)
-    section_totals = {
-        "headline": total,
-        "streaming": streaming_total,
-        "showcase": showcase_total,
-        "pipeline": pipeline_total,
-        "additions": additions_total,
-        "additions_r6": additions_r6_total,
-        "additions_r7": additions_r7_total,
-        "additions_r8": additions_r8_total,
-        "additions_r9": additions_r9_total,
-        "additions_r10": additions_r10_total,
-        "additions_r11": additions_r11_total,
-        "additions_r12": additions_r12_total,
-        "additions_r13": additions_r13_total,
-        "additions_r14": additions_r14_total,
-        "additions_r15": additions_r15_total,
-        "staged_r16": staged_r16_total,
-        "all": payload["all_total"],
-    }
-    for name, queries in (
-        ("headline", timings),
-        ("streaming", streaming),
-        ("showcase", showcase),
-        ("pipeline", pipeline),
-        ("additions", additions),
-        ("additions_r6", additions_r6),
-        ("additions_r7", additions_r7),
-        ("additions_r8", additions_r8),
-        ("additions_r9", additions_r9),
-        ("additions_r10", additions_r10),
-        ("additions_r11", additions_r11),
-        ("additions_r12", additions_r12),
-        ("additions_r13", additions_r13),
-        ("additions_r14", additions_r14),
-        ("additions_r15", additions_r15),
-        ("staged_r16", staged_r16),
-    ):
+    for s in SECTIONS:
         print(
-            json.dumps({"section": name, "total": section_totals[name],
-                        "queries": queries}),
+            json.dumps({"section": s, "total": section_totals[s],
+                        "queries": timed[s]}),
             flush=True,
         )
     compact = {
         "metric": "headline_total",
-        "value": total,
+        "value": section_totals["headline"],
         "unit": "sec",
-        "queries": timings,
+        "queries": timed["headline"],
         "sf": sf,
         "sections": section_totals,
         "fixtures": fixtures,

@@ -11,8 +11,8 @@ Usage:
     python scripts/dump_plans.py before [sf_dir] [name1,name2,...]
     python scripts/dump_plans.py after  [sf_dir] [name1,name2,...]
 
-With no name list, dumps every non-streaming registered query plus
-the round-16 staged queries.
+With no name list, dumps every non-streaming query, registered and
+``staged``-tagged alike (``registry.staged_specs()``).
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ def main() -> None:
     names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 
     from turnover_odata_etl_spark.plans import registry
-    from turnover_odata_etl_spark.plans.roundsixteen import STAGED
     from turnover_odata_etl_spark.session import get_spark
 
     out_dir = os.path.join(
@@ -41,8 +40,7 @@ def main() -> None:
     spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    specs = dict(registry.all_specs())
-    specs.update(STAGED)
+    specs = {**registry.all_specs(), **registry.staged_specs()}
     if names is None:
         names = [
             n for n, s in specs.items() if "streaming" not in s.tags

@@ -60,11 +60,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from turnover_odata_etl_spark.plans import registry
-    from turnover_odata_etl_spark.plans.roundsixteen import STAGED
 
-    specs = dict(registry.all_specs())
-    specs.update(STAGED)
-    spec = specs[name]
+    spec = {**registry.all_specs(), **registry.staged_specs()}[name]
 
     # warm-up (JVM/codegen/python-worker pool), untimed
     registry.all_specs()["flagship_turnover"].fn(spark, sf_dir).write.format(

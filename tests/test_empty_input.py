@@ -1,7 +1,8 @@
-"""Empty-input sweep: every registered query must survive zero rows.
+"""Empty-input sweep: every registered and staged query must survive
+zero rows.
 
 C3 proved ONE query is schema-stable on empty input; this sweep proves
-the other ~180 (VERDICT r06 item 4). Each registered query — batch and
+the rest (VERDICT r06 item 4). Each query — batch and
 availableNow-drained streaming alike — runs against a fixture dir of
 ZERO-ROW parquet tables carrying the real schemas, and must build,
 execute, and collect without raising. Catches the classic
@@ -45,28 +46,12 @@ def empty_dir(tmp_path_factory, sf_dir):
     return str(d)
 
 
-@pytest.mark.parametrize("name", sorted(registry.all_specs()))
+SPECS = {**registry.all_specs(), **registry.staged_specs()}
+
+
+@pytest.mark.parametrize("name", sorted(SPECS))
 def test_query_survives_empty_input(spark, empty_dir, name):
-    spec = registry.all_specs()[name]
+    spec = SPECS[name]
     df = spec.fn(spark, empty_dir)
     assert df.columns, f"{name}: no columns on empty input"
     df.collect()  # must execute, not just plan
-
-
-# Round-13 queries registered in round 14 (r13 cap ruling), round-14
-# queries in round 15 (r14 cap ruling), and round-15 queries in round
-# 16 (r15 cap ruling) — the registry sweep above covers them all; the
-# dedicated staged blocks were removed per the activation checklists.
-
-# Round-16 STAGED queries (plans/roundsixteen.py — held for a cap
-# ruling) get the same treatment below until registration folds them
-# into the sweep.
-from turnover_odata_etl_spark.plans.roundsixteen import STAGED as STAGED_R16
-
-
-@pytest.mark.parametrize("name", sorted(STAGED_R16))
-def test_staged_query_survives_empty_input(spark, empty_dir, name):
-    spec = STAGED_R16[name]
-    df = spec.fn(spark, empty_dir)
-    assert df.columns, f"{name}: no columns on empty input"
-    df.collect()

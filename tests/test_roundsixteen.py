@@ -1,14 +1,16 @@
-"""Round-16 STAGED queries (plans/roundsixteen.py) — oracle parity,
-run every session while the query awaits a cap ruling (registry
-frozen at 221 by the r15 verdict). Mechanism deep-dives live in
-tests/test_schema_evolution.py."""
+"""Round-16 staged queries (plans/roundsixteen.py, ``staged`` tag) —
+oracle parity, run every session while the query awaits a cap ruling
+(registry frozen at 221 by the r15 verdict). Mechanism deep-dives live
+in tests/test_schema_evolution.py."""
 
 from __future__ import annotations
 
 import duckdb
 
 from .oracle_utils import compare_spark_vs_oracle
-from turnover_odata_etl_spark.plans.roundsixteen import STAGED
+from turnover_odata_etl_spark.plans.registry import staged_specs
+
+STAGED = staged_specs()
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -23,6 +23,7 @@ from . import roundtwelve  # noqa: E402,F401
 from . import roundthirteen  # noqa: E402,F401
 from . import roundfourteen  # noqa: E402,F401
 from . import roundfifteen  # noqa: E402,F401
+from . import roundsixteen  # noqa: E402,F401
 
 # The driver's correctness gate audits the FIRST 50 registrations, so we
 # curate that window each round. The cumulative driver ledger CLOSED in

@@ -516,7 +516,7 @@ def s_gzip_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY source, lang
     """,
-    tags=("relational", "sink", "source", "warc", "llm"),
+    tags=("relational", "sink", "source", "warc", "llm", "bench:additions"),
 )
 def s_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-crawl archive roundtrip: documents serialized as WET-style
@@ -586,7 +586,7 @@ def s_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, l.l_orderkey
     LIMIT 10
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on all three tables (pushed
@@ -920,7 +920,7 @@ def s_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1997-01-01'
     GROUP BY n.n_name
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: a 6-table star-ish join where the dimension
@@ -988,7 +988,7 @@ def e6_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN orders o ON o.o_orderkey = big.l_orderkey
     JOIN customer c ON c.c_custkey = o.o_custkey
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: aggregate the fact FIRST (map-side partial sum
@@ -1287,7 +1287,7 @@ def c_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
          OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3')
     ) GROUP BY supp_nation, cust_nation, l_year
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: bilateral trade volume between two nations by
@@ -1364,7 +1364,7 @@ def e6_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by lost revenue on returned
@@ -1810,7 +1810,7 @@ def p_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
       AND l.l_shipdate <  TIMESTAMP '1997-03-01'
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promo revenue share for a two-month ship
@@ -1858,7 +1858,7 @@ def e6_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity BETWEEN 20 AND 30)
     """,
-    tags=("relational", "join", "bench"),
+    tags=("relational", "join", "bench:showcase"),
 )
 def e6_q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (adapted to this schema's columns): an

@@ -189,7 +189,7 @@ def t_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tf JOIN df USING (term) CROSS JOIN n
     ) WHERE rn <= 3
     """,
-    tags=("llm", "text"),
+    tags=("llm", "text", "bench:headline"),
 )
 def t_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top-3 terms per document, built from explode + two
@@ -271,7 +271,7 @@ def d_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(list_intersect(a.s, b.s))::DOUBLE /
           (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.6
     """,
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "bench:headline"),
 )
 def d_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64)+LSH(32 bands × 2) near-dup pairs at Jaccard ≥ 0.6,
@@ -311,7 +311,7 @@ def d_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(list_intersect(a.s, b.s))::DOUBLE /
           (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.6
     """,
-    tags=("llm", "dedup"),
+    tags=("llm", "dedup", "bench:headline"),
 )
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 3-gram Jaccard ≥ 0.6 pairs via inverted-index self-join
@@ -393,7 +393,7 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT a_id, b_id, round(cos, 4) AS cos
     FROM scored WHERE cos >= 0.45
     """,
-    tags=("llm", "dedup", "similarity"),
+    tags=("llm", "dedup", "similarity", "bench:headline"),
 )
 def d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (≥ 0.45), EXACT, via distributed
@@ -459,7 +459,7 @@ def d_rollhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS n_unique_tokens
     FROM documents
     """,
-    tags=("llm", "text"),
+    tags=("llm", "text", "bench:headline"),
 )
 def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-pre-tokenizer-style token counting (letter/digit/symbol runs
@@ -481,7 +481,7 @@ def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(5 AS BIGINT) AS k, CAST(60 AS BIGINT) AS floor_pct,
            CAST(100 AS BIGINT) AS n_true, CAST(1 AS BIGINT) AS meets_floor
     """,
-    tags=("llm", "similarity"),
+    tags=("llm", "similarity", "bench:headline"),
 )
 def s_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5: deterministic seeded centroids + one
@@ -662,7 +662,7 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM scored
     ) WHERE rn <= 5
     """,
-    tags=("llm", "similarity"),
+    tags=("llm", "similarity", "bench:headline"),
 )
 def s_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for 20 query vectors — map-only
@@ -898,7 +898,7 @@ def m_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum((doc_id + 3 * sy) % 256) AS BIGINT) AS sum_b
     FROM s GROUP BY doc_id
     """,
-    tags=("llm", "multimodal"),
+    tags=("llm", "multimodal", "bench:additions"),
 )
 def m_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED image decode → resize → features, oracle-checked
@@ -995,7 +995,7 @@ def m_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(smp) AS BIGINT) AS max_s
     FROM v GROUP BY doc_id, frame_idx
     """,
-    tags=("llm", "multimodal", "audio"),
+    tags=("llm", "multimodal", "audio", "bench:additions"),
 )
 def m_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode → framed features, oracle-checked — the AUDIO
@@ -2045,7 +2045,7 @@ def _pretrain_oracle(quality_where: str) -> str:
 @register(
     "t_pretrain_pipeline",
     oracle=_pretrain_oracle("n_chars >= 100"),
-    tags=("llm", "pipeline", "dedup", "packing"),
+    tags=("llm", "pipeline", "dedup", "packing", "bench:pipeline"),
 )
 def t_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pretraining-data pipeline END-TO-END as ONE declarative
@@ -2142,7 +2142,7 @@ def _pretrain_stages(quality: DataFrame) -> DataFrame:
 @register(
     "s_warc_to_pretrain",
     oracle=_pretrain_oracle("length(text) >= 100"),
-    tags=("llm", "pipeline", "warc", "dedup", "packing"),
+    tags=("llm", "pipeline", "warc", "dedup", "packing", "bench:additions_r6"),
 )
 def s_warc_to_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INGEST capstone: raw web-crawl archive → training-ready
@@ -2345,7 +2345,7 @@ _BPE_TOP_WORDS = 200
 @register(
     "t_bpe_train",
     oracle=_bpe_train_oracle(_BPE_MERGES, _BPE_TOP_WORDS),
-    tags=("llm", "text", "iterative", "tokenizer"),
+    tags=("llm", "text", "iterative", "tokenizer", "bench:additions"),
 )
 def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer TRAINING (Sennrich et al. 2016): learn the first
@@ -2429,7 +2429,7 @@ def _make_bpe_encoder():
 @register(
     "t_bpe_apply",
     oracle=_bpe_apply_oracle(_BPE_MERGES, _BPE_TOP_WORDS),
-    tags=("llm", "text", "tokenizer"),
+    tags=("llm", "text", "tokenizer", "bench:additions_r6"),
 )
 def t_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer APPLICATION at corpus scale — the train→apply
@@ -2533,7 +2533,7 @@ def t_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY a.doc_id, bb.doc_id
     HAVING sum(CASE WHEN a.bit <> bb.bit THEN 1 ELSE 0 END) <= 3
     """,
-    tags=("llm", "dedup", "multimodal", "phash"),
+    tags=("llm", "dedup", "multimodal", "phash", "bench:additions_r6"),
 )
 def d_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-dup — ties the codec ladder (E62/E86/E91)

@@ -41,7 +41,7 @@ from .registry import register
     WHERE c_mktsegment IN (SELECT Structure FROM codes)
       AND c_mktsegment IS NOT NULL AND c_mktsegment <> ''
     """,
-    tags=("reference", "flagship"),
+    tags=("reference", "flagship", "bench:headline"),
 )
 def flagship_turnover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference pipeline end-to-end (src/etl.py:124-209):

@@ -16,6 +16,11 @@ Conventions that keep the hash comparison robust:
   timestamps;
 - DuckDB ``sum(int)`` yields HUGEINT — oracles cast to BIGINT;
 - nondeterministic top-k/limit queries always carry a total order.
+
+Two tag families carry the inventory's bookkeeping: ``bench:<section>``
+puts a query in that section of ``bench.py`` (at most one per query), and
+``staged`` holds a built, oracle-tested query out of ``queries()`` and
+``oracle_sql()`` until it is registered for real (drop the tag).
 """
 
 from __future__ import annotations
@@ -81,14 +86,29 @@ def promote(names: list[str]) -> None:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    return dict(_REGISTRY)
+    """Every registered spec in registry order. Specs tagged
+    ``staged`` (built and tested, held back from the driver contract)
+    are left out here and in the views below; see :func:`staged_specs`."""
+    return {
+        name: spec for name, spec in _REGISTRY.items()
+        if "staged" not in spec.tags
+    }
+
+
+def staged_specs() -> dict[str, QuerySpec]:
+    """The ``staged``-tagged specs, for tools that time or test them."""
+    return {
+        name: spec for name, spec in _REGISTRY.items()
+        if "staged" in spec.tags
+    }
 
 
 def queries() -> dict[str, SparkQuery]:
-    return {name: spec.fn for name, spec in _REGISTRY.items()}
+    return {name: spec.fn for name, spec in all_specs().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: spec.oracle for name, spec in _REGISTRY.items() if spec.oracle is not None
+        name: spec.oracle for name, spec in all_specs().items()
+        if spec.oracle is not None
     }

@@ -37,7 +37,7 @@ from .registry import register
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("relational", "agg", "bench"),
+    tags=("relational", "agg", "bench:headline"),
 )
 def e1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-measure grouped aggregation (TPC-H Q1 shape). Partial
@@ -224,7 +224,7 @@ def e3_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region r   ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name, n.n_name
     """,
-    tags=("relational", "join", "bench"),
+    tags=("relational", "join", "bench:headline"),
 )
 def e3_star_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star join: fact (lineitem) against an orders bridge and three
@@ -307,7 +307,7 @@ def e4_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF LEFT JOIN orders o
       ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
     """,
-    tags=("relational", "join", "asof"),
+    tags=("relational", "join", "asof", "bench:headline"),
 )
 def e4_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each event picks the user's most recent order at
@@ -397,7 +397,7 @@ def e5_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
            ), 2) AS running_total
     FROM orders
     """,
-    tags=("relational", "window"),
+    tags=("relational", "window", "bench:headline"),
 )
 def e5_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum with an explicit ROWS frame (deterministic under
@@ -432,7 +432,7 @@ def e5_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     ) WHERE rn <= 3
     """,
-    tags=("relational", "window"),
+    tags=("relational", "window", "bench:headline"),
 )
 def e6_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per market segment. Spark's WindowGroupLimit

@@ -68,7 +68,7 @@ GIF_ORACLE = """
 @register(
     "m_gif_decode_features",
     oracle=GIF_ORACLE,
-    tags=("llm", "multimodal", "gif"),
+    tags=("llm", "multimodal", "gif", "bench:additions_r8"),
 )
 def m_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GIF decode → features through the REAL codec (round 7:
@@ -163,7 +163,7 @@ SNAPSHOT_PRUNED_ORACLE = """
 @register(
     "s_snapshot_pruned_read",
     oracle=SNAPSHOT_PRUNED_ORACLE,
-    tags=("storage", "snapshot"),
+    tags=("storage", "snapshot", "bench:additions_r8"),
 )
 def s_snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-stat PRUNED point lookup on a snapshot table — the
@@ -252,7 +252,7 @@ G711_ORACLE = _g711_oracle()
 @register(
     "m_g711_decode_features",
     oracle=G711_ORACLE,
-    tags=("llm", "multimodal", "audio", "g711"),
+    tags=("llm", "multimodal", "audio", "g711", "bench:additions_r8"),
 )
 def m_g711_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G.711 companded-audio decode → features through the REAL
@@ -349,7 +349,7 @@ FLAC_ORACLE = """
 @register(
     "m_flac_decode_features",
     oracle=FLAC_ORACLE,
-    tags=("llm", "multimodal", "audio", "flac"),
+    tags=("llm", "multimodal", "audio", "flac", "bench:additions_r8"),
 )
 def m_flac_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAC decode → features through the REAL codec (round 7,
@@ -475,7 +475,7 @@ SNAPSHOT_CHANGES_ORACLE = """
 @register(
     "s_snapshot_changes",
     oracle=SNAPSHOT_CHANGES_ORACLE,
-    tags=("storage", "snapshot", "cdc"),
+    tags=("storage", "snapshot", "cdc", "bench:additions_r8"),
 )
 def s_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-diff CDC read on a snapshot table (round 7 addition
@@ -569,7 +569,7 @@ SNAPSHOT_IVM_ORACLE = """
 @register(
     "s_snapshot_incremental_agg",
     oracle=SNAPSHOT_IVM_ORACLE,
-    tags=("storage", "snapshot", "cdc", "ivm"),
+    tags=("storage", "snapshot", "cdc", "ivm", "bench:additions_r8"),
 )
 def s_snapshot_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-driven incremental aggregate maintenance (round 7,
@@ -675,7 +675,7 @@ EXACT_SUBSTR_ORACLE = r"""
 @register(
     "d_exact_substr_spans",
     oracle=EXACT_SUBSTR_ORACLE,
-    tags=("llm", "dedup", "exact-substr"),
+    tags=("llm", "dedup", "exact-substr", "bench:additions_r8"),
 )
 def d_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level exact-substring dedup stats (round 7,
@@ -739,7 +739,7 @@ TIFF_ORACLE = """
 @register(
     "m_tiff_decode_features",
     oracle=TIFF_ORACLE,
-    tags=("llm", "multimodal", "tiff"),
+    tags=("llm", "multimodal", "tiff", "bench:additions_r8"),
 )
 def m_tiff_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TIFF decode → features through the REAL codec (round 7,
@@ -856,7 +856,7 @@ MIXED_IMAGE_ORACLE = """
 @register(
     "m_mixed_image_decode_features",
     oracle=MIXED_IMAGE_ORACLE,
-    tags=("llm", "multimodal", "dispatch"),
+    tags=("llm", "multimodal", "dispatch", "bench:additions_r8"),
 )
 def m_mixed_image_decode_features(
     spark: SparkSession, sf_dir: str

@@ -130,7 +130,7 @@ LANGID_ORACLE = r"""
 @register(
     "t_langid_confusion",
     oracle=LANGID_ORACLE,
-    tags=("llm", "text", "langid"),
+    tags=("llm", "text", "langid", "bench:additions_r11"),
 )
 def t_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-10-gram Naive-Bayes language ID (top-50k feature
@@ -225,7 +225,7 @@ DML_LIFECYCLE_ORACLE = """
 @register(
     "s_snapshot_dml_lifecycle",
     oracle=DML_LIFECYCLE_ORACLE,
-    tags=("storage", "snapshot", "delete", "update"),
+    tags=("storage", "snapshot", "delete", "update", "bench:additions_r11"),
 )
 def s_snapshot_dml_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full DML-verb lifecycle through the snapshot stack

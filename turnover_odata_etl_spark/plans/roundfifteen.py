@@ -178,7 +178,7 @@ QUALITY_CLASSIFIER_ORACLE = _quality_oracle()
 @register(
     "t_quality_classifier",
     oracle=QUALITY_CLASSIFIER_ORACLE,
-    tags=("llm", "text", "quality", "ml"),
+    tags=("llm", "text", "quality", "ml", "bench:additions_r15"),
 )
 def t_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-Spark trained quality classifier (SURVEY E124,
@@ -272,7 +272,7 @@ TAG_GC_ORACLE = """
 @register(
     "s_snapshot_tag_gc",
     oracle=TAG_GC_ORACLE,
-    tags=("storage", "snapshot", "tags", "gc"),
+    tags=("storage", "snapshot", "tags", "gc", "bench:additions_r15"),
 )
 def s_snapshot_tag_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot tags + orphan-file GC lifecycle (SURVEY E123,
@@ -400,7 +400,10 @@ GROUP_WAP_ORACLE = """
 @register(
     "s_group_wap_rebuild",
     oracle=GROUP_WAP_ORACLE,
-    tags=("storage", "snapshot", "wap", "group", "similarity"),
+    tags=(
+        "storage", "snapshot", "wap", "group", "similarity",
+        "bench:additions_r15",
+    ),
 )
 def s_group_wap_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atomic multi-table write-audit-publish (SURVEY E122's group

@@ -99,7 +99,7 @@ DV_DELETE_ORACLE = """
 @register(
     "s_snapshot_dv_delete",
     oracle=DV_DELETE_ORACLE,
-    tags=("storage", "snapshot", "delete", "dv"),
+    tags=("storage", "snapshot", "delete", "dv", "bench:additions_r14"),
 )
 def s_snapshot_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read deletion-vector lifecycle (SURVEY E121): three
@@ -186,7 +186,7 @@ WAP_ORACLE = """
 @register(
     "s_snapshot_wap_publish",
     oracle=WAP_ORACLE,
-    tags=("storage", "snapshot", "wap", "branch"),
+    tags=("storage", "snapshot", "wap", "branch", "bench:additions_r14"),
 )
 def s_snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-audit-publish lifecycle (SURVEY E122): two id-sliced
@@ -299,7 +299,10 @@ IVF_REFRESH_ORACLE = """
 @register(
     "s_knn_ivf_refresh",
     oracle=IVF_REFRESH_ORACLE,
-    tags=("llm", "similarity", "storage", "incremental", "maintenance"),
+    tags=(
+        "llm", "similarity", "storage", "incremental", "maintenance",
+        "bench:additions_r14",
+    ),
 )
 def s_knn_ivf_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durable-codebook IVF index maintenance lifecycle (SURVEY E119,

@@ -106,7 +106,7 @@ AVI_ORACLE = """
 @register(
     "m_avi_decode_features",
     oracle=AVI_ORACLE,
-    tags=('llm', 'multimodal', 'video'),
+    tags=('llm', 'multimodal', 'video', 'bench:additions_r9'),
 )
 def m_avi_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVI/MJPEG video decode → per-clip features through the REAL
@@ -273,7 +273,7 @@ EXACT_SUBSTR_CLEAN_ORACLE = r"""
 @register(
     "d_exact_substr_clean",
     oracle=EXACT_SUBSTR_CLEAN_ORACLE,
-    tags=('llm', 'dedup', 'exact-substr'),
+    tags=('llm', 'dedup', 'exact-substr', 'bench:additions_r9'),
 )
 def d_exact_substr_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL step of the ExactSubstr ladder as an end-to-end
@@ -344,7 +344,7 @@ SNAPSHOT_LIFECYCLE_ORACLE = """
 @register(
     "s_snapshot_lifecycle",
     oracle=SNAPSHOT_LIFECYCLE_ORACLE,
-    tags=('storage', 'snapshot'),
+    tags=('storage', 'snapshot', 'bench:additions_r9'),
 )
 def s_snapshot_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-table LIFECYCLE end-to-end: three commits (upserts +
@@ -406,7 +406,7 @@ SNAPSHOT_IVM_STREAM_ORACLE = """
 @register(
     "st_snapshot_ivm",
     oracle=SNAPSHOT_IVM_STREAM_ORACLE,
-    tags=('streaming', 'snapshot', 'ivm'),
+    tags=('streaming', 'snapshot', 'ivm', 'bench:additions_r9'),
 )
 def st_snapshot_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING materialized view end-to-end
@@ -521,7 +521,7 @@ SNAPSHOT_SKIPPING_ORACLE = """
 @register(
     "s_snapshot_skipping",
     oracle=SNAPSHOT_SKIPPING_ORACLE,
-    tags=('storage', 'snapshot', 'skipping'),
+    tags=('storage', 'snapshot', 'skipping', 'bench:additions_r9'),
 )
 def s_snapshot_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generic DATA SKIPPING on a snapshot table (round 8,
@@ -602,7 +602,7 @@ ODATA_DELTA_SYNC_ORACLE = """
 @register(
     "s_odata_delta_sync",
     oracle=ODATA_DELTA_SYNC_ORACLE,
-    tags=('source', 'odata', 'delta-sync'),
+    tags=('source', 'odata', 'delta-sync', 'bench:additions_r9'),
 )
 def s_odata_delta_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OData V4 delta-link incremental sync END-TO-END (round 8,
@@ -757,7 +757,7 @@ SEMANTIC_DEDUP_ORACLE = """
 @register(
     "d_semdedup_kmeans",
     oracle=SEMANTIC_DEDUP_ORACLE,
-    tags=('llm', 'dedup', 'semantic'),
+    tags=('llm', 'dedup', 'semantic', 'bench:additions_r9'),
 )
 def d_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic dedup (operators/dedup.semantic_dedup —
@@ -896,7 +896,7 @@ BYTE_ENTROPY_ORACLE = """
 @register(
     "t_byte_entropy",
     oracle=BYTE_ENTROPY_ORACLE,
-    tags=('llm', 'text', 'quality'),
+    tags=('llm', 'text', 'quality', 'bench:additions_r9'),
 )
 def t_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shannon byte-entropy quality scoring over the corpus
@@ -1197,7 +1197,7 @@ INCREMENTAL_NEARDUP_ORACLE = r"""
 @register(
     "d_incremental_neardup",
     oracle=INCREMENTAL_NEARDUP_ORACLE,
-    tags=('llm', 'dedup', 'incremental'),
+    tags=('llm', 'dedup', 'incremental', 'bench:additions_r9'),
 )
 def d_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL MinHash-LSH near-dup — the production corpus-
@@ -1306,7 +1306,7 @@ TRIANGLE_ORACLE = """
 @register(
     "g_triangle_count",
     oracle=TRIANGLE_ORACLE,
-    tags=('graph',),
+    tags=('graph', 'bench:additions_r9'),
 )
 def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the co-purchase graph — the third

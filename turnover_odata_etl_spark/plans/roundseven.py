@@ -49,7 +49,7 @@ PNG_ADAM7_ORACLE = """
 @register(
     "m_png_adam7_decode_features",
     oracle=PNG_ADAM7_ORACLE,
-    tags=("llm", "multimodal", "png"),
+    tags=("llm", "multimodal", "png", "bench:additions_r7"),
 )
 def m_png_adam7_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adam7-INTERLACED PNG decode → resize → features (round 6 built
@@ -185,7 +185,7 @@ BPE_TOKENIZE_ORACLE = _build_tokenize_oracle()
 @register(
     "t_bpe_tokenize_ids",
     oracle=BPE_TOKENIZE_ORACLE,
-    tags=("llm", "text", "bpe"),
+    tags=("llm", "text", "bpe", "bench:additions_r7"),
 )
 def t_bpe_tokenize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer's REAL output: the ordered token sequence per
@@ -270,7 +270,7 @@ ADPCM_ORACLE = """
 @register(
     "m_adpcm_decode_features",
     oracle=ADPCM_ORACLE,
-    tags=("llm", "multimodal", "audio", "adpcm"),
+    tags=("llm", "multimodal", "audio", "adpcm", "bench:additions_r7"),
 )
 def m_adpcm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED-audio decode → framed features through the REAL

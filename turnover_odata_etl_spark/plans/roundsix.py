@@ -54,7 +54,7 @@ JPEG_ORACLE = """
 @register(
     "m_jpeg_decode_features",
     oracle=JPEG_ORACLE,
-    tags=("llm", "multimodal", "jpeg"),
+    tags=("llm", "multimodal", "jpeg", "bench:additions_r6"),
 )
 def m_jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-JPEG decode → features through the REAL codec

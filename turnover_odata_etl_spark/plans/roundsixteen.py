@@ -42,23 +42,21 @@ join), exact re-rank of the short list only; served flag-free from
 a fresh handle under a recall contract (floor 50; measured
 74/70/84).
 
-Activation checklist (mirror of roundfifteen's, executed at ruling):
-1. move the specs into ``@register`` form (oracles are eager
-   constants), import roundsixteen in ``plans/__init__``,
-2. add them to the gate window for their first round,
-3. move STAGED_R16 → ADDITIONS_R16 in bench.py,
-4. remove the staged empty-sweep block (tests/test_empty_input.py),
-5. grep ``'== 22[0-9]'`` across tests/ — registry-count pins live in
-   test_roundeight/test_roundnine/test_roundthirteen/
-   test_roundfourteen/test_roundfifteen,
-6. plan-audit adjudications: the evolution verbs are driver-side
-   metadata commits (no Spark job); the evolution contract row is a
-   1-row local frame (filesystem metadata by design); the capstone's
-   per-step gradient collects are D-sized (model, not data — the
-   E124 adjudication), its langid frames are alphabet-sized
-   crossJoins (the E110 adjudication), and its >6 exchanges are the
-   composed pipeline's load-bearing stages (the t_pretrain_pipeline
-   adjudication).
+Staging is the ``staged`` tag: the registry keeps these specs out of
+``queries()``/``oracle_sql()`` (so out of the driver contract and the
+221 count), while ``registry.staged_specs()`` feeds the tools that
+oracle-test, empty-sweep and bench them. Registering one means
+deleting its ``staged`` tag here, renaming its ``bench:staged_r16``
+tag to the next ``bench:additions_rN`` section (a new section name
+also goes into ``bench.SECTIONS``), and moving the count pin in
+tests/test_inventory.py. Plan-audit adjudications for that day:
+the evolution verbs are driver-side metadata commits (no Spark job);
+the evolution contract row is a 1-row local frame (filesystem
+metadata by design); the capstone's per-step gradient collects are
+D-sized (model, not data — the E124 adjudication), its langid frames
+are alphabet-sized crossJoins (the E110 adjudication), and its >6
+exchanges are the composed pipeline's load-bearing stages (the
+t_pretrain_pipeline adjudication).
 """
 
 from __future__ import annotations
@@ -67,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import load_table
-from .registry import QuerySpec
+from .registry import register
 from .roundfifteen import (
     QUALITY_BUCKETS,
     QUALITY_LEX,
@@ -108,6 +106,14 @@ SCHEMA_EVOLUTION_ORACLE = """
 """
 
 
+@register(
+    "s_schema_evolution_fieldid",
+    oracle=SCHEMA_EVOLUTION_ORACLE,
+    tags=(
+        "storage", "snapshot", "schema", "evolution", "staged",
+        "bench:staged_r16",
+    ),
+)
 def s_schema_evolution_fieldid(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -451,6 +457,14 @@ def _curation_oracle() -> str:
 CURATION_PIPELINE_ORACLE = _curation_oracle()
 
 
+@register(
+    "t_curation_pipeline",
+    oracle=CURATION_PIPELINE_ORACLE,
+    tags=(
+        "llm", "pipeline", "langid", "quality", "ml", "staged",
+        "bench:staged_r16",
+    ),
+)
 def t_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION curation order (CCNet/C4/LLaMA) end-to-end
     with the LEARNED stages in the chain (VERDICT r15 item 3):
@@ -565,6 +579,11 @@ IVFPQ_ORACLE = """
 """
 
 
+@register(
+    "s_knn_ivfpq",
+    oracle=IVFPQ_ORACLE,
+    tags=("llm", "similarity", "storage", "pq", "staged", "bench:staged_r16"),
+)
 def s_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ lifecycle end-to-end (SURVEY E127 — the FAISS IVFPQ
     production composition, ``IvfIndex(pq=True)``): three waves
@@ -635,25 +654,3 @@ def s_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cosine_topk(queries, emb, "vec_id", "embedding", k=5)
     return recall_contract(approx, exact, k=5, floor_pct=50)
 
-
-# Staged specs — same shape the registry holds, NOT registered (cap).
-STAGED: dict[str, QuerySpec] = {
-    "s_schema_evolution_fieldid": QuerySpec(
-        name="s_schema_evolution_fieldid",
-        fn=s_schema_evolution_fieldid,
-        oracle=SCHEMA_EVOLUTION_ORACLE,
-        tags=("storage", "snapshot", "schema", "evolution"),
-    ),
-    "t_curation_pipeline": QuerySpec(
-        name="t_curation_pipeline",
-        fn=t_curation_pipeline,
-        oracle=CURATION_PIPELINE_ORACLE,
-        tags=("llm", "pipeline", "langid", "quality", "ml"),
-    ),
-    "s_knn_ivfpq": QuerySpec(
-        name="s_knn_ivfpq",
-        fn=s_knn_ivfpq,
-        oracle=IVFPQ_ORACLE,
-        tags=("llm", "similarity", "storage", "pq"),
-    ),
-}

@@ -60,7 +60,7 @@ APPEND_COMPACT_ORACLE = """
 @register(
     "s_snapshot_append_compact",
     oracle=APPEND_COMPACT_ORACLE,
-    tags=("storage", "snapshot", "append", "compact"),
+    tags=("storage", "snapshot", "append", "compact", "bench:additions_r10"),
 )
 def s_snapshot_append_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND → replay → dedup-COMPACT → GC lifecycle
@@ -176,7 +176,7 @@ DSIR_ORACLE = r"""
 @register(
     "t_dsir_importance",
     oracle=DSIR_ORACLE,
-    tags=("llm", "sampling", "importance"),
+    tags=("llm", "sampling", "importance", "bench:additions_r10"),
 )
 def t_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance selection (Xie et al. 2023): score every RAW
@@ -410,7 +410,7 @@ SEMDEDUP_INCREMENTAL_ORACLE = """
 @register(
     "d_semdedup_incremental",
     oracle=SEMDEDUP_INCREMENTAL_ORACLE,
-    tags=("llm", "dedup", "semantic", "incremental"),
+    tags=("llm", "dedup", "semantic", "incremental", "bench:additions_r10"),
 )
 def d_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL semantic dedup — SemDeDup's production arrival

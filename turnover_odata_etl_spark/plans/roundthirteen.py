@@ -125,7 +125,7 @@ AGG_STATS_ORACLE = """
 @register(
     "s_snapshot_agg_stats",
     oracle=AGG_STATS_ORACLE,
-    tags=("storage", "snapshot", "metadata", "stats"),
+    tags=("storage", "snapshot", "metadata", "stats", "bench:additions_r13"),
 )
 def s_snapshot_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-only aggregates lifecycle (SURVEY E116,
@@ -226,7 +226,7 @@ BLOOM_DELETE_ORACLE = """
 @register(
     "s_snapshot_bloom_pruned_delete",
     oracle=BLOOM_DELETE_ORACLE,
-    tags=("storage", "snapshot", "bloom", "delete"),
+    tags=("storage", "snapshot", "bloom", "delete", "bench:additions_r13"),
 )
 def s_snapshot_bloom_pruned_delete(
     spark: SparkSession, sf_dir: str
@@ -341,7 +341,7 @@ HISTORY_ORACLE = """
 @register(
     "s_snapshot_history",
     oracle=HISTORY_ORACLE,
-    tags=("storage", "snapshot", "metadata", "history"),
+    tags=("storage", "snapshot", "metadata", "history", "bench:additions_r13"),
 )
 def s_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot HISTORY metadata table (SURVEY E120,
@@ -420,7 +420,7 @@ COBUCKET_ORACLE = """
 @register(
     "s_join_cobucketed",
     oracle=COBUCKET_ORACLE,
-    tags=("storage", "snapshot", "join", "cobucket"),
+    tags=("storage", "snapshot", "join", "cobucket", "bench:additions_r13"),
 )
 def s_join_cobucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-free co-bucketed snapshot join (SURVEY E118 / VERDICT

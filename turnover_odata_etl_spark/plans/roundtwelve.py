@@ -137,7 +137,7 @@ def _corpus_query_terms(docs: DataFrame) -> DataFrame:
 @register(
     "t_bm25_topk",
     oracle=BM25_ORACLE,
-    tags=("llm", "text", "retrieval"),
+    tags=("llm", "text", "retrieval", "bench:additions_r12"),
 )
 def t_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 retrieval (operators/retrieval.bm25_topk) for
@@ -177,7 +177,9 @@ IVF_PERSISTENT_ORACLE = """
 @register(
     "s_knn_ivf_persistent",
     oracle=IVF_PERSISTENT_ORACLE,
-    tags=("llm", "similarity", "storage", "incremental"),
+    tags=(
+        "llm", "similarity", "storage", "incremental", "bench:additions_r12",
+    ),
 )
 def s_knn_ivf_persistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERSISTENT IVF ANN index (VERDICT r11 item 5 / SURVEY E112) —
@@ -280,7 +282,10 @@ def s_knn_ivf_persistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXACT convergence to the batch answer: the batch oracle applies
     # verbatim (see the query docstring).
     oracle=BM25_ORACLE,
-    tags=("llm", "text", "retrieval", "storage", "incremental"),
+    tags=(
+        "llm", "text", "retrieval", "storage", "incremental",
+        "bench:additions_r12",
+    ),
 )
 def s_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL BM25 over a persistent two-table index
@@ -358,7 +363,7 @@ ZORDER_ORACLE = """
 @register(
     "s_snapshot_zorder_skipping",
     oracle=ZORDER_ORACLE,
-    tags=("storage", "snapshot", "zorder", "skipping"),
+    tags=("storage", "snapshot", "zorder", "skipping", "bench:additions_r12"),
 )
 def s_snapshot_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-ORDER layout lifecycle (SURVEY E114,
@@ -470,7 +475,7 @@ MERGE_INTO_ORACLE = """
 @register(
     "s_snapshot_merge_into",
     oracle=MERGE_INTO_ORACLE,
-    tags=("storage", "snapshot", "merge", "dml"),
+    tags=("storage", "snapshot", "merge", "dml", "bench:additions_r12"),
 )
 def s_snapshot_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO lifecycle (``SnapshotTable.merge_into``, round 12)

@@ -36,7 +36,7 @@ from .registry import register
     FROM events
     GROUP BY 1, 2
     """,
-    tags=("streaming",),
+    tags=("streaming", "bench:streaming"),
 )
 def st_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows per event_type, run as a real stream
@@ -97,7 +97,7 @@ def st_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions
     GROUP BY user_id, session_id
     """,
-    tags=("streaming",),
+    tags=("streaming", "bench:streaming"),
 )
 def st_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows (30-minute gap) as a real stream; the
@@ -192,7 +192,7 @@ def st_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_id = (SELECT max(event_id) FROM events e2
                       WHERE e2.user_id = e.user_id)
     """,
-    tags=("streaming", "merge", "incremental"),
+    tags=("streaming", "merge", "incremental", "bench:streaming"),
 )
 def st_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's daily cron (etl.yml:4-13) done incrementally:
@@ -257,7 +257,9 @@ def st_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT CAST(2 AS BIGINT) AS snap, * FROM s2
     """,
-    tags=("streaming", "merge", "snapshot", "timetravel"),
+    tags=(
+        "streaming", "merge", "snapshot", "timetravel", "bench:additions_r7",
+    ),
 )
 def st_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-ISOLATED keep-latest merge with TIME TRAVEL — the

@@ -68,7 +68,7 @@ def _t(spark, sf_dir, *names):
            round(supply_cost, 4) AS supply_cost
     FROM cand WHERE supply_cost = best
     """,
-    tags=("relational", "join", "subquery", "bench"),
+    tags=("relational", "join", "subquery", "bench:showcase"),
 )
 def e6_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape — for each qualifying part, the EUROPE supplier
@@ -138,7 +138,7 @@ def e6_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND l.l_shipdate > o.o_orderdate)
     GROUP BY o_orderpriority
     """,
-    tags=("relational", "join", "semi", "bench"),
+    tags=("relational", "join", "semi", "bench:showcase"),
 )
 def e6_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape — count orders per priority having at least one
@@ -179,7 +179,7 @@ def e6_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("relational", "agg", "bench"),
+    tags=("relational", "agg", "bench:showcase"),
 )
 def e6_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 — the purest pushdown test: three conjunctive filters
@@ -231,7 +231,7 @@ def e6_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                           ELSE 0 END) / sum(volume), 4) AS mkt_share
     FROM vol GROUP BY o_year
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape — NATION_7's share of AMERICA-customer ECONOMY-
@@ -314,7 +314,7 @@ def e6_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%widget%'
     GROUP BY 1, 2
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape — profit on 'widget' parts per supplier nation
@@ -375,7 +375,7 @@ def e6_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_partkey
     HAVING sum(val) > (SELECT sum(val) * 0.005 FROM natl)
     """,
-    tags=("relational", "agg", "subquery", "bench"),
+    tags=("relational", "agg", "subquery", "bench:showcase"),
 )
 def e6_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape — parts whose NATION_3-supplied value exceeds a
@@ -429,7 +429,7 @@ def e6_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate <  TIMESTAMP '1998-01-01'
     GROUP BY l.l_returnflag
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q12_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape — per shipping category, how many lines belong
@@ -473,7 +473,7 @@ def e6_q12_priority_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame
       GROUP BY c.c_custkey
     ) GROUP BY c_count
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 — the distribution of per-customer order counts,
@@ -519,7 +519,7 @@ def e6_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rev JOIN supplier s ON rev.l_suppkey = s.s_suppkey
     WHERE rev.total_rev = (SELECT max(total_rev) FROM rev)
     """,
-    tags=("relational", "agg", "subquery", "bench"),
+    tags=("relational", "agg", "subquery", "bench:showcase"),
 )
 def e6_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 — the supplier(s) with maximum quarterly revenue
@@ -578,7 +578,7 @@ def e6_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                                WHERE s_acctbal < 0)
     GROUP BY 1, 2, 3
     """,
-    tags=("relational", "join", "agg", "bench"),
+    tags=("relational", "join", "agg", "bench:showcase"),
 )
 def e6_q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape — distinct supplier counts per (brand, type,
@@ -629,7 +629,7 @@ def e6_q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM br JOIN avgs ON br.l_partkey = avgs.l_partkey
     WHERE br.l_quantity < avgs.qty_thresh
     """,
-    tags=("relational", "join", "agg", "subquery", "bench"),
+    tags=("relational", "join", "agg", "subquery", "bench:showcase"),
 )
 def e6_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 — revenue lost to small-quantity orders: lines of one
@@ -683,7 +683,7 @@ def e6_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         HAVING sum(l.l_quantity) > 50
       )
     """,
-    tags=("relational", "join", "semi", "subquery", "bench"),
+    tags=("relational", "join", "semi", "subquery", "bench:showcase"),
 )
 def e6_q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape — suppliers in target nations who moved more
@@ -755,7 +755,7 @@ def e6_q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier s ON b.l_suppkey = s.s_suppkey
     GROUP BY s.s_name
     """,
-    tags=("relational", "join", "agg", "subquery", "bench"),
+    tags=("relational", "join", "agg", "subquery", "bench:showcase"),
 )
 def e6_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — for finished orders with multiple suppliers,
@@ -827,7 +827,7 @@ def e6_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame
                       WHERE o.o_custkey = t.c_custkey)
     GROUP BY n.n_name
     """,
-    tags=("relational", "join", "anti", "subquery", "bench"),
+    tags=("relational", "join", "anti", "subquery", "bench:showcase"),
 )
 def e6_q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape — well-funded customers in target countries who

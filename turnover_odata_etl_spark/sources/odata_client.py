@@ -329,15 +329,13 @@ class ODataClient:
         select: str | None = None,
         filter_: str | None = None,
         top: int | None = None,
-        queue_size: int = 1,
     ) -> Iterator[list[dict[str, Any]]]:
         """:meth:`fetch_pages` with intra-partition page PREFETCH:
         page N+1's HTTP round-trip overlaps the consumer's processing
-        of page N (one producer thread, bounded queue — default one
-        page in flight, so memory stays O(page)). Same pages, same
-        order, same errors as the serial pager; the politeness
-        ``pause`` still runs in the producer, so the wire cadence is
-        unchanged [S1, S6].
+        of page N (one producer thread, a queue of one page, so memory
+        stays O(page)). Same pages, same order, same errors as the
+        serial pager; the politeness ``pause`` still runs in the
+        producer, so the wire cadence is unchanged [S1, S6].
 
         Why: the page chain inside one Spark partition is otherwise a
         serial fetch→yield loop, so per-partition throughput is
@@ -352,7 +350,7 @@ class ODataClient:
         import queue as queue_mod
         import threading
 
-        q: queue_mod.Queue = queue_mod.Queue(maxsize=queue_size)
+        q: queue_mod.Queue = queue_mod.Queue(maxsize=1)
         stop = threading.Event()
         done = object()
 

@@ -279,16 +279,10 @@ class ODataReader(DataSourceReader):
             clauses.append(build_filter_eq(partition.key_field, partition.key_value))
         filter_ = " and ".join(clauses) if clauses else None
 
-        # Page prefetch (default ON): overlap page N+1's round-trip
-        # with page N's row coercion — the serial pager is RTT-bound
-        # per partition. Disable with option prefetch=false (e.g. to
-        # debug wire traces in strict lockstep).
-        prefetch = self.options.get("prefetch", "true").lower() != "false"
-        pager = (
-            client.fetch_pages_prefetched if prefetch else client.fetch_pages
-        )
+        # Page prefetch: overlap page N+1's round-trip with page N's
+        # row coercion — the serial pager is RTT-bound per partition.
         try:
-            for page in pager(
+            for page in client.fetch_pages_prefetched(
                 entity, select=select, filter_=filter_, top=top
             ):
                 for row in page:
